@@ -2700,7 +2700,7 @@ def q_dedup_signature_state_fold(spark, sf_dir):
     is the SAME oracle as dedup_signature_state. This closes the
     one-consumer risk: the optimized fold path now has its own
     end-to-end oracle row outside the streaming envelope, with the
-    default state guard (check_state=True) exercised per fold."""
+    state fingerprint guard exercised per fold."""
     import tempfile
 
     from caspr_spark.llm.dedup import (append_history_signatures_state,

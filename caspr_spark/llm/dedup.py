@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from caspr_spark.cache import register_cache
+from caspr_spark.state import VersionedTable, mask_deletes, union_frames
 
 
 # Above this many distinct gram hashes the decontamination operators stop
@@ -754,10 +755,7 @@ def merge_gram_censuses(censuses: list, n: int):
     track_first = tracks.pop()
     cols = ["gram_hash", "cnt"] + (
         ["first_id", "first_pos"] if track_first else [])
-    u = None
-    for c in censuses:
-        c = _check_gram_n(c, n).select(*cols)
-        u = c if u is None else u.unionByName(c)
+    u = union_frames([_check_gram_n(c, n).select(*cols) for c in censuses])
     aggs = [F.sum("cnt").alias("cnt")]
     if track_first:
         aggs.append(F.min(F.struct(
@@ -766,6 +764,16 @@ def merge_gram_censuses(censuses: list, n: int):
     if track_first:
         out = out.select("gram_hash", "cnt", "__f.*")
     return out.withColumn("gram_n", F.lit(n).cast("int"))
+
+
+def _census_table(n: int) -> VersionedTable:
+    """The gram census's :class:`~caspr_spark.state.VersionedTable`:
+    the associative :func:`merge_gram_censuses` fold, no tombstones; a
+    single live frame keeps the same in-plan ``gram_n`` guard."""
+    def merge(frames):
+        return (_check_gram_n(frames[0], n) if len(frames) == 1
+                else merge_gram_censuses(frames, n))
+    return VersionedTable("census", merge=merge, deletes=False)
 
 
 def duplicated_spans_incremental(batch: DataFrame, census: DataFrame,
@@ -1528,22 +1536,29 @@ def merge_history_key_frames(frames: list,
     forgotten between their folds — electing first and masking second
     would drop the younger, legitimate row along with the forgotten
     winner."""
-    if not frames:
-        raise ValueError("merge_history_key_frames needs at least one frame")
-    u = None
-    for seq, f in enumerate(frames):
-        f = f.select(F.lit(seq).alias("__seq"), "content_key",
-                     "history_id")
-        u = f if u is None else u.unionByName(f)
+    u = union_frames([f.select(F.lit(seq).alias("__seq"), "content_key",
+                               "history_id")
+                      for seq, f in enumerate(frames)])
     if deletes is not None:
-        u = u.join(F.broadcast(
-            deletes.select(F.col(deletes.columns[0])
-                           .alias("history_id")).distinct()),
-            on="history_id", how="left_anti")
+        u = mask_deletes(u, deletes, "history_id")
     return (u.groupBy("content_key")
              .agg(F.min(F.struct("__seq", "history_id")).alias("__w"))
              .select("content_key", F.col("__w.history_id")
                      .alias("history_id")))
+
+
+def _merge_key_state(frames: list, deletes: DataFrame | None):
+    """The key table's merge: a single live frame with no tombstones
+    already holds one row per key and reads as itself; anything else
+    runs the first-seen-wins election with forgotten ids masked
+    before it."""
+    if len(frames) == 1 and deletes is None:
+        return frames[0]
+    return merge_history_key_frames(frames, deletes=deletes)
+
+
+_KEYS_TABLE = VersionedTable("key", merge=_merge_key_state,
+                             id_col="history_id", mask_before_merge=True)
 
 
 def append_history_keys_state(spark, state_dir: str, batch_id: int,
@@ -1586,18 +1601,9 @@ def append_history_keys_state(spark, state_dir: str, batch_id: int,
     and two weekly restore points retained — run ``prune_state`` right
     after each fold (it never touches live or markerless frames).
     """
-    from caspr_spark.state import fold_commit, read_deletes_state
-
-    def merge(frames):
-        # compaction bakes forgotten ids in (forget_documents_state):
-        # the compact simply no longer holds their keys, and pruning
-        # the superseded frames erases the bytes
-        return merge_history_key_frames(
-            frames, deletes=read_deletes_state(spark, state_dir))
-
-    fold_commit(spark, state_dir, batch_id, "delta", compact_every,
-                build_history_keys(accepted, id_col, text_col, normalize),
-                merge)
+    _KEYS_TABLE.fold(spark, state_dir, batch_id,
+                     build_history_keys(accepted, id_col, text_col,
+                                        normalize), compact_every)
 
 
 def read_history_keys_state(spark, state_dir: str) -> DataFrame:
@@ -1608,18 +1614,7 @@ def read_history_keys_state(spark, state_dir: str) -> DataFrame:
     doc's keys stop suppressing future docs the moment its tombstone
     commits) — feed straight to
     ``dedup_against_history(..., history_keys=...)``."""
-    from caspr_spark.state import (live_frames, read_deletes_state,
-                                   state_listing, state_path)
-
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed key state under {state_dir}")
-    dfs = [spark.read.parquet(state_path(state_dir, b, k))
-           for b, k in frames]
-    deletes = read_deletes_state(spark, state_dir)
-    if len(dfs) == 1 and deletes is None:
-        return dfs[0]
-    return merge_history_key_frames(dfs, deletes=deletes)
+    return _KEYS_TABLE.read(spark, state_dir)
 
 
 def build_history_signatures(history: DataFrame, id_col: str = "doc_id",
@@ -1690,64 +1685,59 @@ def append_history_signatures(signatures: DataFrame, accepted: DataFrame,
     return signatures.unionByName(new)
 
 
-def check_signature_state(spark, state_dir: str, hash_family: str,
-                          num_hashes: int) -> None:
-    """Refuse a family OR width mismatch against the COMMITTED
-    signature state under ``state_dir`` — the shared guard behind both
-    the fold side (:func:`append_history_signatures_state`) and the
-    streaming sink's PRE-WRITE check
-    (:func:`caspr_spark.streaming.dedup_corpus_sink` runs it before a
-    batch's output dir is written, so a mismatched pre-existing state
-    can never commit an under-deduped output that a replay then folds
-    permanently). One bounded probe of the newest NON-EMPTY live frame
-    (empty deltas are probed past, not trusted — a batch where every
-    doc deduped away commits a zero-row delta, routine for the
-    streaming sink); an empty/absent state passes (nothing committed
-    to contradict). Mismatched families share no band keys and
-    mismatched widths band differently — either silently part-matches
-    forever, so both refuse loudly."""
-    from caspr_spark.state import probe_newest_nonempty
-
-    probe = probe_newest_nonempty(
-        spark, state_dir,
-        [F.col("hash_family"), F.size("minhash").alias("__nh")])
-    if probe is None:
-        return
-    stored_family, stored_nh = probe[0], probe[1]
-    if stored_family != hash_family:
-        raise ValueError(
-            f"signature state under {state_dir} was built with "
-            f"hash_family={stored_family!r} but this fold uses "
-            f"{hash_family!r}; mixed-family frames share no "
-            "band keys (batches would silently part-match "
-            "forever) — use the stored family or a new state "
-            "dir")
-    if stored_nh != num_hashes:
-        raise ValueError(
-            f"signature state under {state_dir} holds "
-            f"{stored_nh}-hash signatures but this fold uses "
-            f"num_hashes={num_hashes}; band keys from different "
-            "widths never match — use the stored width or a "
-            "new state dir")
+def _signature_table(hash_family: str | None = None,
+                     num_hashes: int | None = None) -> VersionedTable:
+    """The signature table's :class:`~caspr_spark.state.VersionedTable`:
+    union merge (each frame is one accepted batch — disjoint ids),
+    forgotten ids masked after it, and the ``hash_family`` +
+    ``size(minhash)`` fingerprint (no guard without them)."""
+    fp = () if hash_family is None else (
+        ("hash_family={!r}", "hash_family", hash_family),
+        ("{0}-hash signatures (num_hashes={0})", "size(minhash)",
+         num_hashes))
+    return VersionedTable(
+        "signature", fingerprint=fp, id_col="history_id",
+        hint="mixed-family or mixed-width frames share no band keys "
+             "(batches would silently part-match forever)")
 
 
-def merge_history_signature_frames(frames: list) -> DataFrame:
-    """Merge signature-table frames: a pure ``unionByName``. Unlike
-    the key table there is no election to run — every frame holds the
-    signatures of ONE accepted (already-deduplicated) crawl batch, and
-    batches carry disjoint ``history_id`` sets by construction (the
-    state protocol skips replayed batch ids, so the one way a batch's
-    rows could appear twice — a post-crash replay of the same crawl
-    day — never reaches the union). Kept as a named merge so the
-    compaction step and any tree-of-partials build state the
-    disjointness invariant in one place."""
-    if not frames:
-        raise ValueError(
-            "merge_history_signature_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u
+def _signature_rows(accepted: DataFrame, id_col: str, text_col: str,
+                    num_hashes: int, shingle_size: int, hash_family: str,
+                    signatures: DataFrame | None = None) -> DataFrame:
+    """The signature encoder: ``accepted``'s ``(history_id, shingles,
+    minhash, hash_family)`` state rows — built here, or taken from a
+    caller's already-built ``signatures`` frame (see
+    :func:`append_history_signatures_state`)."""
+    if signatures is None:
+        return build_history_signatures(accepted, id_col, text_col,
+                                        num_hashes, shingle_size,
+                                        hash_family)
+    _check_signature_family(signatures, hash_family)
+    # In-plan width tripwire (zero extra jobs): a frame built with a
+    # different num_hashes would commit signatures whose band keys
+    # never match future batches — silent under-dedup forever. The
+    # state guard can't see width (it probes the COMMITTED state,
+    # which may be empty on the first fold), so every folded row
+    # asserts its own width at execution; valid rows pass through
+    # untouched, so committed bytes are unchanged. Note the row-set
+    # contract stays the caller's: an accepted id MISSING from the
+    # frame is silently absent from the fold (the semi-join keeps the
+    # row set pinned to ``accepted`` without an extra verification
+    # job) — pass the FULL batch's signatures, as the streaming sink
+    # does.
+    wide_ok = F.size("minhash") == num_hashes
+    guarded = F.when(wide_ok, F.col("minhash")).otherwise(
+        F.raise_error(F.concat(
+            F.lit("append_history_signatures_state: signatures= frame "
+                  "holds "), F.size("minhash").cast("string"),
+            F.lit(f"-hash signatures but this fold declares "
+                  f"num_hashes={num_hashes} — mis-widthed state "
+                  "would silently never band-match"))
+        ).cast("array<bigint>"))
+    return (signatures
+            .join(accepted.select(id_col), on=id_col, how="left_semi")
+            .select(F.col(id_col).alias("history_id"), "shingles",
+                    guarded.alias("minhash"), "hash_family"))
 
 
 def append_history_signatures_state(spark, state_dir: str, batch_id: int,
@@ -1758,137 +1748,58 @@ def append_history_signatures_state(spark, state_dir: str, batch_id: int,
                                     shingle_size: int = 3,
                                     hash_family: str = "fast",
                                     compact_every: int = 8,
-                                    signatures: DataFrame | None = None,
-                                    check_state: bool = True) -> None:
+                                    signatures: DataFrame | None = None
+                                    ) -> None:
     """Fold an ACCEPTED crawl batch's signatures into a VERSIONED
     signature-table state dir — the exactly-once form of
-    :func:`append_history_signatures`, closing the near-mode half of
-    the state story (the key table got this in
-    :func:`append_history_keys_state`). The plain append has two
-    scale problems this fixes: it rewrites the WHOLE table per crawl
-    (O(state) writes — shingle arrays make this table corpus-sized),
-    and a replayed crawl day RE-APPENDS its signatures, duplicating
-    band keys — every future batch then sees duplicated candidate and
-    match rows and pays a doubled band-join fan-out. Here batch ``b``
-    writes only its own signatures as a delta (O(batch)); replayed
-    batch ids skip via the shared :mod:`caspr_spark.state` commit
-    protocol (``_SUCCESS`` markers, out-of-order folds refuse loudly);
-    every ``compact_every``-th commit unions the live frames into a
-    compact (:func:`merge_history_signature_frames` — batches hold
-    disjoint ids, so the union IS the merge). ``batch_id`` must be
-    caller-supplied and strictly increasing across crawls (the day
-    number) — that is what makes re-running a day idempotent.
+    :func:`append_history_signatures`, which rewrites the WHOLE table
+    per crawl (O(state) — shingle arrays make it corpus-sized) and
+    RE-APPENDS a replayed day's signatures (duplicated band keys, a
+    doubled band-join fan-out forever). Here batch ``b`` writes only
+    its own signatures as an O(batch) delta under the shared
+    :mod:`caspr_spark.state` protocol (:func:`_signature_table`):
+    replayed batch ids skip, out-of-order ids refuse, every
+    ``compact_every``-th commit unions the live frames (disjoint ids)
+    and bakes in forgotten ids (:func:`forget_documents_state`).
+    ``batch_id`` is caller-supplied and strictly increasing (the day
+    number).
 
-    The ``hash_family`` and ``num_hashes`` are enforced against the
-    COMMITTED state: one bounded probe of a live frame (file-backed
-    parquet, minimal projection) refuses a fold whose family or
-    signature width differs from what the dir holds — a mismatched
-    family would poison the table with rows that silently share no
-    band keys. ``shingle_size`` stays the caller's contract exactly as
-    on :func:`build_history_signatures` (it is not recoverable from
-    the stored values). Prune superseded frames with
-    :func:`caspr_spark.state.prune_state`. The near-mode daily loop::
+    The ``hash_family`` and ``num_hashes`` fingerprint guard refuses a
+    fold whose family or signature width differs from the committed
+    state. ``shingle_size`` stays the caller's contract (it is not
+    recoverable from the stored values). The near-mode daily loop::
 
         sigs = read_history_signatures_state(spark, state_dir)
         kept, _ = dedup_against_history(batch, None, mode='near',
                                         history_signatures=sigs, ...)
         append_history_signatures_state(spark, state_dir, day, kept, ...)
-    """
-    from caspr_spark.state import fold_commit
 
+    ``signatures``: a caller that already built this batch's
+    signatures (the streaming sink builds them once per micro-batch)
+    hands them in instead of paying another shingle+minhash pass. The
+    frame must be the :func:`build_history_signatures` shape keyed by
+    ``id_col``, built with the same num_hashes/shingle_size/
+    hash_family; a semi-join on ``accepted`` pins the folded rows, and
+    the deterministic build keeps the committed bytes unchanged
+    (regression-tested)."""
     if hash_family not in ("fast", "portable"):
         raise ValueError(f"hash_family must be 'fast' or 'portable', "
                          f"got {hash_family!r}")
-    if check_state:
-        # ``check_state=False`` is for a caller that ALREADY verified
-        # family+width against this dir in this process (the streaming
-        # sink runs check_signature_state pre-write on its first
-        # history fold, and every later frame in the dir was committed
-        # by that same sink instance at the same parameters) — the
-        # probe is one limit(1) Spark job per fold, pure latency on a
-        # micro-batch. Batch callers keep the default: the guard is
-        # what makes a mismatched pre-existing state refuse loudly.
-        check_signature_state(spark, state_dir, hash_family, num_hashes)
-
-    if signatures is not None:
-        # a caller that already built this batch's signatures (the
-        # streaming sink computes them once per micro-batch for the
-        # internal LSH pass and the history banded join) can hand them in
-        # instead of paying a THIRD full shingle+minhash pass here. The
-        # frame must be the :func:`build_history_signatures` shape keyed
-        # by ``id_col`` and built with the same
-        # num_hashes/shingle_size/hash_family (the persisted-sketch
-        # contract); the semi-join on ``accepted`` pins the folded rows to
-        # exactly the accepted relation — signature values are identical
-        # to a re-derivation because the build is deterministic, so the
-        # committed state bytes are unchanged (regression-tested).
-        _check_signature_family(signatures, hash_family)
-        # In-plan width tripwire (zero extra jobs): a frame built with a
-        # different num_hashes would commit signatures whose band keys
-        # never match future batches — silent under-dedup forever. The
-        # family guard above can't see width (it probes the COMMITTED
-        # state, which may be empty on the first fold), so every folded
-        # row asserts its own width at execution; valid rows pass
-        # through untouched, so committed bytes are unchanged. Note the
-        # row-set contract stays the caller's: an accepted id MISSING
-        # from the frame is silently absent from the fold (the semi-join
-        # keeps the row set pinned to ``accepted`` without an extra
-        # verification job) — pass the FULL batch's signatures, as the
-        # streaming sink does.
-        wide_ok = F.size("minhash") == num_hashes
-        guarded = F.when(wide_ok, F.col("minhash")).otherwise(
-            F.raise_error(F.concat(
-                F.lit("append_history_signatures_state: signatures= frame "
-                      "holds "), F.size("minhash").cast("string"),
-                F.lit(f"-hash signatures but this fold declares "
-                      f"num_hashes={num_hashes} — mis-widthed state "
-                      "would silently never band-match"))
-            ).cast("array<bigint>"))
-        new_rows = (signatures
-                    .join(accepted.select(id_col), on=id_col,
-                          how="left_semi")
-                    .select(F.col(id_col).alias("history_id"), "shingles",
-                            guarded.alias("minhash"), "hash_family"))
-    else:
-        new_rows = build_history_signatures(accepted, id_col, text_col,
-                                            num_hashes, shingle_size,
-                                            hash_family)
-
-    def merge(frames):
-        # compaction bakes forgotten ids in (forget_documents_state);
-        # union first, then mask — signature frames hold disjoint ids,
-        # so order is immaterial here, unlike the key-table election
-        from caspr_spark.state import apply_deletes_state
-
-        return apply_deletes_state(
-            spark, state_dir, merge_history_signature_frames(frames),
-            "history_id")
-
-    fold_commit(spark, state_dir, batch_id, "delta", compact_every,
-                new_rows, merge)
+    table = _signature_table(hash_family, num_hashes)
+    table.check(spark, state_dir)
+    table.fold(spark, state_dir, batch_id,
+               _signature_rows(accepted, id_col, text_col, num_hashes,
+                               shingle_size, hash_family, signatures),
+               compact_every)
 
 
 def read_history_signatures_state(spark, state_dir: str) -> DataFrame:
     """Current signature table from a versioned state dir
-    (:func:`append_history_signatures_state`): newest compact unioned
-    with every younger delta, minus FORGOTTEN documents' rows
-    (:func:`forget_documents_state`) — feed straight to
-    ``dedup_against_history(..., history_signatures=...)``. The read
-    is file-backed, so the family guard's bounded probe stays one
-    parquet-footer row, never a recompute (and the guard probes raw
-    frames via ``probe_newest_nonempty``, bypassing the tombstone
-    anti-join)."""
-    from caspr_spark.state import (apply_deletes_state, live_frames,
-                                   state_listing, state_path)
-
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(
-            f"no committed signature state under {state_dir}")
-    merged = merge_history_signature_frames(
-        [spark.read.parquet(state_path(state_dir, b, k))
-         for b, k in frames])
-    return apply_deletes_state(spark, state_dir, merged, "history_id")
+    (:func:`append_history_signatures_state`): the live frames
+    unioned, FORGOTTEN documents' rows (:func:`forget_documents_state`)
+    masked — feed straight to
+    ``dedup_against_history(..., history_signatures=...)``."""
+    return _signature_table().read(spark, state_dir)
 
 
 def forget_documents_state(spark, state_dir: str, batch_id: int,
@@ -1910,11 +1821,8 @@ def forget_documents_state(spark, state_dir: str, batch_id: int,
     the forgotten IDS (never content) retained as the audit trail.
 
     ``doc_ids`` needs only ``id_col`` (anything else is dropped); ids
-    are stored under the state tables' ``history_id`` name. Same
-    exactly-once protocol on the tombstone stream's OWN batch-id
-    sequence: a replayed forget-day skips, out-of-order refuses —
-    and the invariant that replayed VECTOR folds skip is untouched
-    (separate frontier, separate dir)."""
+    are stored under the state tables' ``history_id`` name, on the
+    tombstone stream's OWN batch-id sequence."""
     from caspr_spark.state import append_deletes_state
 
     append_deletes_state(spark, state_dir, batch_id,

@@ -184,84 +184,56 @@ def _codebook_fingerprint(codebooks) -> str:
     return hashlib.md5(payload.encode("utf-8")).hexdigest()
 
 
-def _merge_pq_frames(frames: list) -> DataFrame:
-    """Pure ``unionByName`` — ingest batches carry disjoint vector ids
-    by the caller's contract (replayed batch ids never reach the
-    merge; same invariant as the IVF frame merge)."""
-    if not frames:
-        raise ValueError("_merge_pq_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u
+def _pq_table(codebooks=None):
+    """The PQ code table's :class:`~caspr_spark.state.VersionedTable`:
+    union merge (disjoint vector ids by contract), tombstones masked
+    after it on the id column, the ``codebook_fp`` fingerprint pinned
+    to ``codebooks`` (no guard without them — a plain read)."""
+    from caspr_spark.state import VersionedTable
+
+    return VersionedTable(
+        "PQ",
+        fingerprint=(() if codebooks is None else
+                     (("codebook fingerprint {!r}", "codebook_fp",
+                       _codebook_fingerprint(codebooks)),)),
+        hint="codes from different codebooks are incommensurable")
 
 
-def _pq_compact_merge(spark, state_dir: str, id_col: str):
-    """Compaction merge: union the live frames, then BAKE IN any
-    tombstones the delete side-stream holds — the compact is the full
-    state, so an anti-joined row simply leaves it, and pruning the
-    superseded frames erases its bytes (the same rule as the IVF
-    compact merge). Runs only when ``fold_commit`` decides to
-    compact, so delta folds stay O(batch)."""
-    from caspr_spark.state import apply_deletes_state
-
-    def merge(frames):
-        return apply_deletes_state(spark, state_dir,
-                                   _merge_pq_frames(frames), id_col)
-    return merge
+def _pq_frame(batch: DataFrame, codebooks, id_col: str = "vec_id",
+              vec_col: str = "embedding") -> DataFrame:
+    """The PQ encoder: a batch's ``(id, pq_codes, codebook_fp)`` state
+    rows under the pinned ``codebooks``."""
+    return pq_encode(batch, codebooks, vec_col=vec_col).select(
+        F.col(id_col), "pq_codes",
+        F.lit(_codebook_fingerprint(codebooks)).alias("codebook_fp"))
 
 
 def append_pq_state(spark, state_dir: str, batch_id: int,
                     batch: DataFrame, codebooks,
                     id_col: str = "vec_id", vec_col: str = "embedding",
-                    compact_every: int = 8,
-                    check_state: bool = True) -> None:
+                    compact_every: int = 8) -> None:
     """Fold a batch of NEW embeddings into a VERSIONED PQ code table:
-    encode the batch's vectors under the PINNED ``codebooks``
-    (:func:`pq_encode` — the deterministic per-subspace argmin) and
-    commit ``(id, pq_codes)`` as a delta. ``batch_id`` is
-    caller-supplied and strictly increasing (the day number); replayed
-    ids skip, out-of-order ids refuse, and a codebook-fingerprint
-    guard (one parquet-footer probe of the newest non-empty frame,
-    :func:`caspr_spark.state.probe_newest_nonempty`) refuses a fold
-    under different codebooks. Tombstones folded by
-    :func:`append_pq_deletes` are baked in at every compaction;
-    :func:`vacuum_pq_state` forces that off-cadence. Search with
-    :func:`adc_topk_pq_state`; prune superseded frames with
-    :func:`caspr_spark.state.prune_state`."""
-    from caspr_spark.state import fold_commit, probe_newest_nonempty
-
-    fp = _codebook_fingerprint(codebooks)
-    if check_state:
-        # ``check_state=False``: caller already verified the codebook
-        # fingerprint against this dir in this process (the streaming
-        # sink probes on its first fold; later frames were committed by
-        # the same instance under the same pinned codebooks —
-        # single-writer lease). Batch callers keep the default probe.
-        probe = probe_newest_nonempty(spark, state_dir,
-                                      [F.col("codebook_fp")])
-        if probe is not None and probe[0] != fp:
-            raise ValueError(
-                f"PQ state under {state_dir} was built with codebook "
-                f"fingerprint {probe[0]!r} but this fold uses {fp!r}; "
-                "codes from different codebooks are incommensurable — "
-                "use the stored codebooks or a new state dir")
-    frame = pq_encode(batch, codebooks, vec_col=vec_col) \
-        .select(F.col(id_col), "pq_codes", F.lit(fp).alias("codebook_fp"))
-    fold_commit(spark, state_dir, batch_id, "delta", compact_every,
-                frame, _pq_compact_merge(spark, state_dir, id_col))
+    encode the batch under the PINNED ``codebooks`` (:func:`_pq_frame`)
+    and commit ``(id, pq_codes)`` as an O(batch) delta under the shared
+    :mod:`caspr_spark.state` protocol (:func:`_pq_table`; replayed ids
+    skip, out-of-order ids refuse, the ``codebook_fp`` guard refuses
+    other codebooks). Tombstones of :func:`append_pq_deletes` are baked
+    in at every compaction (:func:`vacuum_pq_state` forces it). Search
+    with :func:`adc_topk_pq_state`."""
+    table = _pq_table(codebooks)
+    table.check(spark, state_dir)
+    table.fold(spark, state_dir, batch_id,
+               _pq_frame(batch, codebooks, id_col, vec_col), compact_every)
 
 
 def append_pq_deletes(spark, state_dir: str, batch_id: int,
                       deletes: DataFrame, id_col: str = "vec_id",
                       compact_every: int = 8) -> None:
-    """Fold DELETION tombstones into the versioned PQ code table —
-    the same right-to-erasure side-stream the IVF index carries
-    (:mod:`caspr_spark.state` tombstone protocol, own batch-id
-    frontier): a tombstoned id is invisible to
-    :func:`read_pq_state` / :func:`adc_topk_pq_state` immediately,
-    and its code's bytes leave storage at the next compaction + prune
-    (or :func:`vacuum_pq_state` now)."""
+    """Fold DELETION tombstones into the versioned PQ code table (own
+    batch-id sequence): a tombstoned id is invisible to
+    :func:`read_pq_state` / :func:`adc_topk_pq_state` at once; its
+    code's bytes leave storage at the next compaction + prune, or now
+    via :func:`vacuum_pq_state`."""
     from caspr_spark.state import append_deletes_state
 
     append_deletes_state(spark, state_dir, batch_id,
@@ -271,54 +243,21 @@ def append_pq_deletes(spark, state_dir: str, batch_id: int,
 def vacuum_pq_state(spark, state_dir: str, batch_id: int, codebooks,
                     keep_last: int = 1,
                     id_col: str = "vec_id") -> list[int]:
-    """Force tombstone resolution NOW (the erasure-deadline path):
-    commit a FORCED compact — an empty schema-exact batch whose merge
-    bakes the current delete set into a full frame — then prune the
-    superseded frames, erasing the deleted codes' bytes. ``batch_id``
-    comes from the SAME sequence as the ingest folds (the vacuum IS a
-    fold). Returns the pruned batch ids."""
-    from caspr_spark.state import (fold_commit, live_frames, prune_state,
-                                   state_listing, state_path)
-
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(
-            f"no committed PQ state under {state_dir} — nothing to "
-            "vacuum")
-    fp = _codebook_fingerprint(codebooks)
-    newest_b, newest_k = frames[-1]
-    sample = spark.read.parquet(state_path(state_dir, newest_b, newest_k))
-    probe = sample.select("codebook_fp").limit(1).collect()
-    if probe and probe[0][0] != fp:
-        raise ValueError(
-            f"PQ state under {state_dir} carries codebook fingerprint "
-            f"{probe[0][0]!r} but this vacuum passes {fp!r} — pass the "
-            "codebooks the table was ingested under")
-    frame = sample.limit(0).select(id_col, "pq_codes", "codebook_fp")
-    fold_commit(spark, state_dir, batch_id, "delta", 2, frame,
-                _pq_compact_merge(spark, state_dir, id_col),
-                force_compact=True)
-    return prune_state(spark, state_dir, keep_last)
+    """Force tombstone resolution NOW
+    (:meth:`~caspr_spark.state.VersionedTable.vacuum`): a forced
+    compact bakes the delete set in, then the superseded frames are
+    pruned. Refuses codebooks other than the ingested ones;
+    ``batch_id`` comes from the ingest sequence; ``id_col`` is
+    accepted for signature compatibility. Returns the pruned ids."""
+    return _pq_table(codebooks).vacuum(spark, state_dir, batch_id,
+                                       keep_last)
 
 
 def read_pq_state(spark, state_dir: str) -> DataFrame:
-    """Current code table from a versioned state dir: newest compact
-    unioned with every younger delta, minus any tombstoned ids — the
-    ``(id, pq_codes)`` relation ADC scores. File-backed, so the
-    codebook guard's probe stays one parquet-footer row; a
-    tombstone-free dir keeps its exact pre-tombstone plan (the
-    no-tombstones probe is one listing)."""
-    from caspr_spark.state import (apply_deletes_state, live_frames,
-                                   state_listing, state_path)
-
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed PQ state under {state_dir}")
-    merged = _merge_pq_frames(
-        [spark.read.parquet(state_path(state_dir, b, k))
-         for b, k in frames])
-    return apply_deletes_state(spark, state_dir, merged,
-                               merged.columns[0])
+    """Current code table from a versioned state dir: the live frames
+    unioned, tombstoned ids masked — the ``(id, pq_codes,
+    codebook_fp)`` relation ADC scores."""
+    return _pq_table().read(spark, state_dir)
 
 
 def adc_topk_pq_state(spark, state_dir: str, query, codebooks,
@@ -332,16 +271,8 @@ def adc_topk_pq_state(spark, state_dir: str, query, codebooks,
     one-shot ``pq_encode`` + ``pq_search`` over the union of the
     ingested batches minus deletions (the certified invariant:
     ``simsearch_pq_state`` in ``__spark_entry__``)."""
-    from caspr_spark.state import probe_newest_nonempty
-
-    fp = _codebook_fingerprint(codebooks)
-    probe = probe_newest_nonempty(spark, state_dir,
-                                  [F.col("codebook_fp")])
-    if probe is not None and probe[0] != fp:
-        raise ValueError(
-            f"PQ state under {state_dir} carries codebook fingerprint "
-            f"{probe[0]!r} but this search uses {fp!r} — pass the "
-            "codebooks the table was ingested under")
-    codes = read_pq_state(spark, state_dir).drop("codebook_fp")
+    table = _pq_table(codebooks)
+    table.check(spark, state_dir, "search")
+    codes = table.read(spark, state_dir).drop("codebook_fp")
     return pq_search(codes, query, codebooks, id_col=id_col,
                      top_k=top_k, dist_col=dist_col)

@@ -553,18 +553,42 @@ def _centroid_fingerprint(centroids: list) -> str:
     return hashlib.md5(payload.encode("utf-8")).hexdigest()
 
 
-def _merge_ivf_frames(frames: list) -> DataFrame:
-    """Pure ``unionByName`` — ingest batches carry disjoint vector ids
-    by the caller's contract (the state protocol already makes
-    replayed batch ids a no-op, so a re-run of a crashed ingest day
-    never reaches the union), same disjointness invariant as the
-    signature-table merge."""
-    if not frames:
-        raise ValueError("_merge_ivf_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u
+def _ivf_table(centroids: list | None = None,
+               partition_by_cell: bool = False):
+    """The IVF index's :class:`~caspr_spark.state.VersionedTable`:
+    union merge (ingest batches carry disjoint vector ids by
+    contract), tombstones masked after it on the id column, the
+    ``centroid_fp`` fingerprint pinned to ``centroids`` (no guard
+    without them — a plain read), frames optionally hive-partitioned
+    on ``ivf_cell``."""
+    from caspr_spark.state import VersionedTable
+
+    return VersionedTable(
+        "IVF",
+        fingerprint=(() if centroids is None else
+                     (("centroid fingerprint {!r}", "centroid_fp",
+                       _centroid_fingerprint(centroids)),)),
+        hint="cells from different quantizers are incommensurable "
+             "(probes would silently search the wrong cells)",
+        partition_by=("ivf_cell",) if partition_by_cell else None)
+
+
+def _ivf_frame(batch: DataFrame, centroids: list,
+               id_col: str = "vec_id", vec_col: str = "embedding",
+               assign: str = "expr") -> DataFrame:
+    """The IVF encoder: a batch's ``(id, vector, ivf_cell,
+    centroid_fp)`` state rows under the pinned ``centroids``,
+    repartitioned by cell so each frame's parquet clusters by cell."""
+    if assign not in ("expr", "arrow"):
+        raise ValueError(f"assign must be 'expr' or 'arrow', "
+                         f"got {assign!r}")
+    elect = (nearest_centroid if assign == "expr"
+             else nearest_centroid_arrow)
+    return batch.select(
+        F.col(id_col), F.col(vec_col),
+        elect(vec_col, centroids).alias("ivf_cell"),
+        F.lit(_centroid_fingerprint(centroids)).alias("centroid_fp")) \
+        .repartition("ivf_cell")
 
 
 def append_ivf_state(spark, state_dir: str, batch_id: int,
@@ -572,40 +596,24 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      compact_every: int = 8,
                      partition_by_cell: bool = False,
-                     assign: str = "expr",
-                     check_state: bool = True) -> None:
+                     assign: str = "expr") -> None:
     """Fold a batch of NEW embeddings into a VERSIONED IVF index state
-    dir — continuous embedding ingest, the similarity-family member of
-    the exactly-once state story (the key table and signature table
-    got theirs in r12/r13). A rebuilt index re-assigns the WHOLE
-    corpus per ingest (O(corpus) — a 1e9-vector index is re-scanned
-    daily for a 1e6-vector day); here batch ``b`` assigns only ITS OWN
-    vectors under the PINNED ``centroids`` (the deterministic
-    :func:`nearest_centroid` election) and commits them as a delta
-    (O(batch)); every ``compact_every``-th commit unions the live
-    frames (:func:`_merge_ivf_frames` — disjoint ids by contract).
-    Shares the :mod:`caspr_spark.state` commit protocol: ``_SUCCESS``
-    markers, replayed batch ids skip, out-of-order folds refuse,
-    single-writer lease via :func:`caspr_spark.state.claim_writer` if
-    the caller arms one. ``batch_id`` must be caller-supplied and
-    strictly increasing across ingests (the day number).
+    dir — continuous embedding ingest. A rebuilt index re-assigns the
+    WHOLE corpus per ingest (O(corpus)); here batch ``b`` assigns only
+    ITS OWN vectors under the PINNED ``centroids`` (:func:`_ivf_frame`)
+    and commits them as an O(batch) delta under the shared
+    :mod:`caspr_spark.state` protocol (:func:`_ivf_table`): replayed
+    batch ids skip, out-of-order ids refuse, every
+    ``compact_every``-th commit unions the live frames and bakes in
+    the tombstones of :func:`append_ivf_deletes`. ``batch_id`` is
+    caller-supplied and strictly increasing (the day number).
 
-    The quantizer is enforced against the COMMITTED state: every frame
-    carries a constant ``centroid_fp`` column and a bounded probe
-    (newest non-empty live frame — empty deltas are skipped, not
-    trusted) refuses a fold under different centroids, which would
-    poison the index with cells from two quantizers. Frames are
-    repartitioned by ``ivf_cell`` before the write so each frame's
-    parquet clusters by cell; ``partition_by_cell=True`` additionally
-    writes each frame HIVE-PARTITIONED on ``ivf_cell``, so a probe
-    search reads only its cells' files — Spark's dynamic partition
-    pruning fires on the probe join (the broadcast probe table is the
-    build side), turning an index scan into an ``n_probe``-cells read.
-    Empty batches fall back to a plain frame write (a zero-row
-    partitioned write is unreadable —
-    :func:`caspr_spark.state.fold_commit`'s rule) and both layouts
-    merge transparently on read. Prune superseded frames with
-    :func:`caspr_spark.state.prune_state`.
+    The ``centroid_fp`` fingerprint guard refuses a fold under
+    different centroids — cells from two quantizers would poison the
+    index. ``partition_by_cell=True`` hive-partitions each frame on
+    ``ivf_cell``, so a probe search reads only its cells' files
+    (dynamic partition pruning on the probe join); empty batches fall
+    back to a plain frame write and both layouts merge on read.
 
     ``assign`` picks the election implementation: ``'expr'`` (default)
     is the certified expression election whose fold arithmetic the SQL
@@ -614,88 +622,27 @@ def append_ivf_state(spark, state_dir: str, batch_id: int,
     ~100× per core (SCALING_r15), for uncertified bulk builds where
     the batch is millions of vectors. Both use first-min-wins
     euclidean² argmin; see the arrow twin's docstring for the ulp-tie
-    caveat that keeps certified rows on ``'expr'``.
-
-    Deletion: tombstones folded by :func:`append_ivf_deletes` are
-    BAKED IN at every compaction — the merge anti-joins the current
-    delete set, so a compact simply no longer contains the deleted
-    vectors and a following ``prune_state`` erases their bytes from
-    the superseded frames (the right-to-erasure path;
-    :func:`vacuum_ivf_state` forces it off-cadence)."""
-    from caspr_spark.state import fold_commit, probe_newest_nonempty
-
-    fp = _centroid_fingerprint(centroids)
-    if check_state:
-        # ``check_state=False`` is for a caller that ALREADY verified
-        # the quantizer fingerprint against this dir in this process
-        # (the streaming sink probes on its first fold; every later
-        # frame was committed by that same instance under the same
-        # pinned centroids — single-writer lease), so the per-fold
-        # ``limit(1)`` probe job is pure micro-batch latency there.
-        # Batch callers keep the default: the probe is what makes a
-        # mismatched pre-existing state refuse loudly.
-        probe = probe_newest_nonempty(spark, state_dir,
-                                      [F.col("centroid_fp")])
-        if probe is not None and probe[0] != fp:
-            raise ValueError(
-                f"IVF state under {state_dir} was built with centroid "
-                f"fingerprint {probe[0]!r} but this fold uses "
-                f"{fp!r}; cells from different quantizers are "
-                "incommensurable (probes would silently search the "
-                "wrong cells) — use the stored centroids or a new "
-                "state dir")
-    if assign not in ("expr", "arrow"):
-        raise ValueError(f"assign must be 'expr' or 'arrow', "
-                         f"got {assign!r}")
-    elect = (nearest_centroid if assign == "expr"
-             else nearest_centroid_arrow)
-    frame = batch.select(
-        F.col(id_col), F.col(vec_col),
-        elect(vec_col, centroids).alias("ivf_cell"),
-        F.lit(fp).alias("centroid_fp")).repartition("ivf_cell")
-    fold_commit(spark, state_dir, batch_id, "delta", compact_every,
-                frame, _ivf_compact_merge(spark, state_dir, id_col),
-                partition_by=["ivf_cell"] if partition_by_cell else None)
-
-
-def _ivf_compact_merge(spark, state_dir: str, id_col: str):
-    """The IVF compaction merge: union the live frames
-    (:func:`_merge_ivf_frames`), then BAKE IN any tombstones the
-    delete side-stream holds (:mod:`caspr_spark.state` tombstone
-    protocol) — the compact is the full state, so an anti-joined row
-    simply leaves it, and pruning the superseded frames then erases
-    its bytes. Runs only when :func:`caspr_spark.state.fold_commit`
-    decides to compact, so delta folds stay O(batch)."""
-    from caspr_spark.state import apply_deletes_state
-
-    def merge(frames):
-        return apply_deletes_state(spark, state_dir,
-                                   _merge_ivf_frames(frames), id_col)
-    return merge
+    caveat that keeps certified rows on ``'expr'``."""
+    table = _ivf_table(centroids, partition_by_cell)
+    table.check(spark, state_dir)
+    table.fold(spark, state_dir, batch_id,
+               _ivf_frame(batch, centroids, id_col, vec_col, assign),
+               compact_every)
 
 
 def append_ivf_deletes(spark, state_dir: str, batch_id: int,
                        deletes: DataFrame, id_col: str = "vec_id",
                        compact_every: int = 8) -> None:
     """Fold DELETION tombstones into the versioned IVF index — the
-    forget-document / right-to-erasure lifecycle operation an
-    append-only embedding store otherwise lacks (a deleted corpus
-    document's vector would stay searchable forever). ``deletes``
-    needs only the id column (anything else is dropped — no content
-    rides into the tombstone stream). Effect is immediate:
-    :func:`read_ivf_state` / :func:`cosine_topk_ivf_state` anti-join
-    the delete set, so a tombstoned vector can never appear in a probe
-    result; the bytes leave storage at the next compaction + prune
-    (every compact bakes the delete set in — or force it now with
-    :func:`vacuum_ivf_state`).
-
-    Same exactly-once protocol as the vector folds, on the delete
-    stream's OWN batch-id sequence (independent frontier): replayed
-    delete days skip, out-of-order refuse. Contract: ids are unique
-    across the ingest lifetime (already the vector-fold contract), so
-    a tombstone is order-independent — it masks the id whether its
-    vector arrived before or after, and re-ingesting a deleted id is
-    the same contract violation re-ingesting a live one is."""
+    right-to-erasure operation an append-only embedding store lacks.
+    ``deletes`` needs only the id column (nothing else rides into the
+    tombstone stream). A tombstoned vector is invisible to
+    :func:`read_ivf_state` / :func:`cosine_topk_ivf_state` at once;
+    its bytes leave storage at the next compaction + prune, or now via
+    :func:`vacuum_ivf_state`. The delete stream has its OWN batch-id
+    sequence under the same exactly-once protocol. Ids are unique
+    across the ingest lifetime, so a tombstone masks its id whether
+    the vector arrived before or after it."""
     from caspr_spark.state import append_deletes_state
 
     append_deletes_state(spark, state_dir, batch_id,
@@ -708,72 +655,30 @@ def vacuum_ivf_state(spark, state_dir: str, batch_id: int,
                      vec_col: str = "embedding",
                      partition_by_cell: bool = False) -> list[int]:
     """Force tombstone resolution NOW instead of at the compaction
-    cadence — the erasure-deadline path: commit a FORCED compact (an
-    empty batch folded with ``force_compact``, so the merge bakes the
-    current delete set into a full frame) and prune the superseded
-    frames, erasing the deleted vectors' bytes from storage. Returns
-    the pruned batch ids.
+    cadence (:meth:`~caspr_spark.state.VersionedTable.vacuum`): a
+    forced compact bakes the delete set in, then the superseded frames
+    are pruned (``keep_last=1``: erasure means they go), erasing the
+    deleted vectors' bytes. Refuses centroids other than the ones the
+    index was ingested under; returns the pruned batch ids.
 
-    ``batch_id`` comes from the SAME sequence as the ingest folds —
-    the vacuum IS a fold, so a batch caller passes its next day
-    number. For a STREAMING ingest (:func:`~caspr_spark.streaming.
-    ann_ingest_sink`, which derives ids from the checkpoint), do not
-    interleave external vacuum folds — the sink's next id would
-    collide with the vacuum's and skip as a replay; rely on the sink's
-    ``compact_every`` cadence instead (every compact already bakes
-    deletes), then run ``prune_state`` beside the stream.
-    ``keep_last=1`` by default: erasure means superseded frames go,
-    not linger as restore points that still hold the vectors."""
-    from caspr_spark.state import (fold_commit, live_frames, prune_state,
-                                   state_listing, state_path)
-
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(
-            f"no committed IVF state under {state_dir} — nothing to "
-            "vacuum")
-    fp = _centroid_fingerprint(centroids)
-    newest_b, newest_k = frames[-1]
-    # schema-exact empty batch from the newest frame (vector element
-    # type follows whatever was ingested); the fingerprint guard rides
-    # the merge's own frames, but assert here too for a loud refusal
-    sample = spark.read.parquet(state_path(state_dir, newest_b, newest_k))
-    frame = sample.limit(0).select(id_col, vec_col, "ivf_cell",
-                                   "centroid_fp")
-    probe = sample.select("centroid_fp").limit(1).collect()
-    if probe and probe[0][0] != fp:
-        raise ValueError(
-            f"IVF state under {state_dir} carries centroid fingerprint "
-            f"{probe[0][0]!r} but this vacuum passes {fp!r} — pass the "
-            "centroids the index was ingested under")
-    fold_commit(spark, state_dir, batch_id, "delta", 2, frame,
-                _ivf_compact_merge(spark, state_dir, id_col),
-                partition_by=["ivf_cell"] if partition_by_cell else None,
-                force_compact=True)
-    return prune_state(spark, state_dir, keep_last)
+    ``batch_id`` comes from the SAME sequence as the ingest folds (the
+    vacuum IS a fold). Do not interleave external vacuums with a
+    STREAMING ingest (:func:`~caspr_spark.streaming.ann_ingest_sink`
+    derives ids from its checkpoint, so its next id would skip as a
+    replay); its ``compact_every`` cadence already bakes deletes — run
+    ``prune_state`` beside the stream. ``id_col``/``vec_col`` are
+    accepted for signature compatibility; the compact keeps the
+    committed frames' own columns."""
+    return _ivf_table(centroids, partition_by_cell).vacuum(
+        spark, state_dir, batch_id, keep_last)
 
 
 def read_ivf_state(spark, state_dir: str) -> DataFrame:
     """Current IVF index from a versioned state dir
-    (:func:`append_ivf_state`): newest compact unioned with every
-    younger delta, minus any tombstoned ids
-    (:func:`append_ivf_deletes` — a deleted vector is invisible the
-    moment its tombstone commits, before any compaction bakes it in).
-    The ``(id, vector, ivf_cell)`` relation a probe searches;
-    file-backed, so the quantizer guard's probe stays one
-    parquet-footer row, and a delete-free state dir keeps its exact
-    pre-tombstone plan (the no-tombstones probe is one listing)."""
-    from caspr_spark.state import (apply_deletes_state, live_frames,
-                                   state_listing, state_path)
-
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed IVF state under {state_dir}")
-    merged = _merge_ivf_frames(
-        [spark.read.parquet(state_path(state_dir, b, k))
-         for b, k in frames])
-    id_col = merged.columns[0]    # the ingest contract's id column
-    return apply_deletes_state(spark, state_dir, merged, id_col)
+    (:func:`append_ivf_state`): the live frames unioned, tombstoned ids
+    (:func:`append_ivf_deletes`) masked — the ``(id, vector, ivf_cell,
+    centroid_fp)`` relation a probe searches."""
+    return _ivf_table().read(spark, state_dir)
 
 
 def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
@@ -783,20 +688,16 @@ def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
                           vec_col: str = "embedding",
                           query_id_col: str = "query_id",
                           static_prune: bool = True) -> DataFrame:
-    """IVF ANN over the VERSIONED ingest index: read the state
-    (:func:`read_ivf_state`), verify the quantizer fingerprint
-    matches ``centroids`` (probing the wrong quantizer's cells
-    silently returns wrong neighbors — refuse loudly instead), then
-    run the shared probe + exact cosine re-rank
-    (:func:`_ivf_probe_topk`). Because ingest pinned the same
-    deterministic :func:`nearest_centroid` election, searching the
-    state-built index is row-identical to searching a one-shot
-    ``cosine_topk_ivf(corpus, ..., centroids=...)`` index over the
-    union of the ingested batches MINUS any tombstoned ids
-    (:func:`append_ivf_deletes`) — the certified invariant. The
-    fingerprint probe reads a raw frame footer directly
-    (:func:`caspr_spark.state.probe_newest_nonempty`), so it never
-    pays the tombstone anti-join the masked read carries.
+    """IVF ANN over the VERSIONED ingest index: verify the quantizer
+    fingerprint matches ``centroids`` (probing the wrong quantizer's
+    cells silently returns wrong neighbors — refuse loudly instead),
+    read the state (:func:`read_ivf_state`), then run the shared probe
+    + exact cosine re-rank (:func:`_ivf_probe_topk`). Because ingest
+    pinned the same deterministic :func:`nearest_centroid` election,
+    searching the state-built index is row-identical to searching a
+    one-shot ``cosine_topk_ivf(corpus, ..., centroids=...)`` index over
+    the union of the ingested batches MINUS any tombstoned ids
+    (:func:`append_ivf_deletes`) — the certified invariant.
 
     ``static_prune=True`` (default) pushes the probed cell set into
     the frame scans as a literal filter instead of relying on the
@@ -804,17 +705,9 @@ def cosine_topk_ivf_state(spark, state_dir: str, queries: DataFrame,
     compile instead of two, and prunes the plain layout's row groups
     too (see :func:`_ivf_probe_topk`); ``False`` keeps the pure
     broadcast-join plan (no driver-side probe materialization)."""
-    from caspr_spark.state import probe_newest_nonempty
-
-    fp = _centroid_fingerprint(centroids)
-    probe = probe_newest_nonempty(spark, state_dir,
-                                  [F.col("centroid_fp")])
-    if probe is not None and probe[0] != fp:
-        raise ValueError(
-            f"IVF state under {state_dir} carries centroid fingerprint "
-            f"{probe[0]!r} but this search uses {fp!r} — pass the "
-            "centroids the index was ingested under")
-    indexed = read_ivf_state(spark, state_dir)
+    table = _ivf_table(centroids)
+    table.check(spark, state_dir, "search")
+    indexed = table.read(spark, state_dir)
     return _ivf_probe_topk(indexed.drop("centroid_fp"), queries, k,
                            n_probe, centroids, id_col, vec_col,
                            query_id_col, static_prune=static_prune)

@@ -97,27 +97,47 @@ def load_tables(spark: SparkSession, sf_dir: str,
     return {n: read_parquet_table(spark, f"{sf_dir}/{n}.parquet") for n in names}
 
 
-# (canonicalized-plan string, applicationId) -> (n_partitions, sizeInBytes).
-# The partition-count probe below costs ~50 ms of driver-side PHYSICAL
-# PLANNING per fresh DataFrame (r15 "not yet optimized" item; dozens of
-# probes per bench pass, most over identical plans — the same base-table
-# scan probed by every operator that consumes it). Two semantically equal
-# plans in one application yield the same scan partitioning (same files,
-# same session confs), so the probe result is memoizable by the CANONICAL
-# plan text — the full string, not a 32-bit semanticHash, because a hash
-# collision here would silently change a repartition decision and with it
-# the float-summation order of certified queries. The memo changes NO
-# decisions: cache hits return exactly what the probe would have (and did)
-# return. Contract (holds engine-wide): parquet dirs are immutable once
-# written — versioned state frames supersede-then-delete under NEW paths,
-# corpus output dirs are write-once — so a path's file set never changes
-# under one application while a same-plan re-read occurs.
-_NPARTS_CACHE: dict[tuple[str, str], tuple[int, int | None]] = {}
+# (canonical plan, file listings, split confs, parallelism, applicationId)
+#   -> (n_partitions, sizeInBytes). The partition-count probe below costs
+# ~50 ms of driver-side PHYSICAL PLANNING per fresh DataFrame, mostly over
+# the same base-table scans. A hit returns exactly what the probe returned
+# for the same key, and the key holds everything the count and the size
+# estimate depend on — the canonical plan text alone does not: it omits the
+# scanned files and renders every in-memory frame of one schema the same.
+# So only plans whose leaves are ALL file-source relations are memoized,
+# keyed with each leaf's file listing (path, length, mtime) and the confs a
+# live session can change between probes (``configure_for_scale``).
+_NPARTS_CACHE: dict[tuple, tuple[int, int | None]] = {}
 _NPARTS_CACHE_MAX = 1024
+_NPARTS_CONFS = ("spark.sql.shuffle.partitions",
+                 "spark.sql.files.maxPartitionBytes",
+                 "spark.sql.files.openCostInBytes",
+                 "spark.sql.files.minPartitionNum")
 # probe telemetry (driver-side ints, no jobs): calls vs physical-planning
-# probes actually paid — the r16 done-criterion evidence ("probe count in
-# a bench trace drops to ≤ once per source relation")
+# probes actually paid
 _NPARTS_STATS = {"calls": 0, "misses": 0}
+
+
+def _nparts_key(df: DataFrame) -> tuple | None:
+    """The probe memo key, or ``None`` when the plan reads anything but
+    files (in-memory frames, ranges, streams) — those are never
+    memoized."""
+    plan = df._jdf.queryExecution().analyzed()
+    listings = []
+    leaves = plan.collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            return None
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            return None
+        listings.append(rel.location().allFiles().toString())
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    return (plan.canonicalized().toString(), tuple(listings),
+            tuple(spark.conf.get(c, None) for c in _NPARTS_CONFS),
+            sc.defaultParallelism, sc.applicationId)
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
@@ -138,23 +158,21 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
     bytes-per-task heuristic under-parallelizes badly (shingling 5k docs
     is minutes of CPU on single-digit MB of input).
 
-    Probe results are memoized per canonical plan (``_NPARTS_CACHE``):
-    repeat probes of a semantically identical frame skip the physical
-    planning, returning the identical count — the repartition DECISION
-    (and hence certified partition layouts) is unchanged by construction.
+    Probe results of file-only plans are memoized (``_NPARTS_CACHE``,
+    keyed by :func:`_nparts_key`): repeat probes of the same files under
+    the same plan and confs skip the physical planning, returning the
+    identical count — the repartition DECISION (and hence certified
+    partition layouts) is unchanged by construction.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     _NPARTS_STATS["calls"] += 1
     key = None
     try:
-        key = (df._jdf.queryExecution().analyzed().canonicalized()
-               .toString(),
-               df.sparkSession.sparkContext.applicationId)
+        key = _nparts_key(df)
     except Exception:
         pass
     hit = _NPARTS_CACHE.get(key) if key is not None else None
-    n = hit[0] if hit is not None else None
-    size = hit[1] if hit is not None else None
+    n, size = hit if hit is not None else (None, None)
     if min_partitions is None and cpu_light:
         if size is None:
             try:
@@ -162,6 +180,8 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None,
                            .stats().sizeInBytes())
             except Exception:
                 pass  # stats unavailable (e.g. streaming plan): keep cores
+            if hit is not None and size is not None:
+                _NPARTS_CACHE[key] = (n, size)     # write the size back
         if size is not None:
             target = max(4, min(target, size // (2 << 20) + 1))
     if n is None:

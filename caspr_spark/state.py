@@ -1,7 +1,25 @@
-"""Versioned parquet state dirs — the shared commit protocol under the
-incremental-state sinks (the streaming gram census,
-:func:`caspr_spark.streaming.gram_census_sink`, and the exact-dedup
-history key table, :func:`caspr_spark.llm.dedup.append_history_keys_state`).
+"""Versioned parquet state tables — one commit protocol, one table spec.
+
+Five incremental-state families keep versioned state dirs; each is a
+:class:`VersionedTable` spec plus an encoder that turns a batch into
+its state rows:
+
+- IVF index (``llm.similarity.append_ivf_state``): union merge,
+  ``centroid_fp`` fingerprint, optional ``ivf_cell`` partitioning;
+- PQ code table (``llm.pq.append_pq_state``): union merge,
+  ``codebook_fp`` fingerprint;
+- exact-dedup key table (``llm.dedup.append_history_keys_state``):
+  first-seen-wins election, tombstones masked before it;
+- near-dedup signature table
+  (``llm.dedup.append_history_signatures_state``): union merge,
+  ``hash_family`` + ``size(minhash)`` fingerprint;
+- gram census (``streaming.gram_census_sink``): census merge, no
+  tombstones.
+
+The spec's operations — :meth:`VersionedTable.fold`, ``read``,
+``check`` and ``vacuum`` — run every family over :func:`fold_commit`;
+the streaming sinks share one ``foreachBatch`` factory on top
+(``streaming._state_sink``).
 
 One state dir holds immutable per-commit subdirs named
 ``{kind}{batch_id}``:
@@ -42,8 +60,11 @@ dirs are ``hdfs://``/``s3a://`` in production, local only in tests.
 
 from __future__ import annotations
 
+import functools
 import json
 import uuid
+from dataclasses import dataclass
+from typing import Callable
 
 _KINDS = {"v": "full", "c": "compact", "d": "delta"}
 _PREFIX = {v: k for k, v in _KINDS.items()}
@@ -55,21 +76,31 @@ def _fs(spark, state_dir: str):
     return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def state_listing(spark, state_dir: str) -> list[tuple[int, str]]:
-    """Committed state dirs as sorted ``(batch_id, kind)`` pairs, where
-    kind is ``'full'`` / ``'compact'`` / ``'delta'``."""
-    jvm, fs, jpath = _fs(spark, state_dir)
+def _numbered_dirs(spark, path: str, prefixes) -> list:
+    """The one marker-checked listing: every ``{prefix}{digits}`` subdir
+    of ``path`` as ``(prefix, id, FileStatus, committed)``, where
+    ``committed`` means its ``_SUCCESS`` marker exists."""
+    jvm, fs, jpath = _fs(spark, path)
     if not fs.exists(jpath):
         return []
     out = []
     for st in fs.listStatus(jpath):
         name = st.getPath().getName()
-        if (st.isDirectory() and name[:1] in _KINDS
-                and name[1:].isdigit()):
-            marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
-                out.append((int(name[1:]), _KINDS[name[:1]]))
-    return sorted(out)
+        for p in prefixes:
+            if (name.startswith(p) and name[len(p):].isdigit()
+                    and st.isDirectory()):
+                marker = jvm.org.apache.hadoop.fs.Path(st.getPath(),
+                                                       "_SUCCESS")
+                out.append((p, int(name[len(p):]), st, fs.exists(marker)))
+    return out
+
+
+def state_listing(spark, state_dir: str) -> list[tuple[int, str]]:
+    """Committed state dirs as sorted ``(batch_id, kind)`` pairs, where
+    kind is ``'full'`` / ``'compact'`` / ``'delta'``."""
+    return sorted((b, _KINDS[p])
+                  for p, b, _, ok in _numbered_dirs(spark, state_dir, _KINDS)
+                  if ok)
 
 
 def state_path(state_dir: str, batch_id: int, kind: str) -> str:
@@ -84,18 +115,8 @@ def committed_output_ids(spark, out_dir: str,
     data dir alongside their state fold (e.g. the streaming corpus
     dedup's kept-docs dirs). Markerless dirs (crashed attempts) are
     invisible, same rule as state frames."""
-    jvm, fs, jpath = _fs(spark, out_dir)
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if (st.isDirectory() and name.startswith(prefix)
-                and name[len(prefix):].isdigit()):
-            marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if fs.exists(marker):
-                out.append(int(name[len(prefix):]))
-    return sorted(out)
+    return sorted(b for _, b, _, ok in _numbered_dirs(spark, out_dir,
+                                                      (prefix,)) if ok)
 
 
 def output_committed(spark, out_path: str) -> bool:
@@ -110,22 +131,11 @@ def output_committed(spark, out_path: str) -> bool:
         jvm.org.apache.hadoop.fs.Path(jpath, "_SUCCESS")))
 
 
-def probe_newest_nonempty(spark, state_dir: str, exprs: list):
-    """One row of ``exprs`` from the newest NON-EMPTY live frame of a
-    versioned state dir, probing PAST empty frames (a batch where
-    every row deduped/filtered away commits a zero-row delta — routine
-    for streaming sinks), or ``None`` when no live frame has rows.
-    The shared guard-probe for state writers that enforce a
-    constant-per-table contract (the signature table's
-    family/width, the IVF index's centroid fingerprint): file-backed
-    ``limit(1)`` reads, never a recompute."""
-    frames = live_frames(state_listing(spark, state_dir))
-    for b, k in reversed(frames):
-        probe = (spark.read.parquet(state_path(state_dir, b, k))
-                 .select(*exprs).limit(1).collect())
-        if probe:
-            return probe[0]
-    return None
+def _read_live(spark, state_dir: str) -> list:
+    """The live frames of a state dir (:func:`live_frames`), each read
+    as a DataFrame, oldest first."""
+    return [spark.read.parquet(state_path(state_dir, b, k))
+            for b, k in live_frames(state_listing(spark, state_dir))]
 
 
 def check_layout(listing: list, layout: str, state_dir: str) -> None:
@@ -165,6 +175,17 @@ def live_frames(listing: list,
     out += [(b, k) for b, k in listing
             if k == "delta" and (base is None or b > base)]
     return out
+
+
+def _read_lease(jvm, fs, lease) -> str | None:
+    """The writer id stored in a ``_writer`` lease file; raises
+    ``ValueError`` when the lease is not readable JSON."""
+    stream = fs.open(lease)
+    try:
+        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(raw).get("writer_id")
 
 
 def claim_writer(spark, state_dir: str, writer_id: str) -> None:
@@ -213,13 +234,8 @@ def claim_writer(spark, state_dir: str, writer_id: str) -> None:
         # actually survived the race and raises on a mismatch.
         if not fs.rename(tmp, lease):
             fs.delete(tmp, False)   # lost the first-claim race — compare
-    stream = fs.open(lease)
     try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    try:
-        stored = json.loads(raw).get("writer_id")
+        stored = _read_lease(jvm, fs, lease)
     except ValueError as exc:
         raise RuntimeError(
             f"the _writer lease under {state_dir} is unreadable "
@@ -236,33 +252,49 @@ def claim_writer(spark, state_dir: str, writer_id: str) -> None:
             "over ownership")
 
 
+def check_fold_args(layout: str, compact_every: int) -> None:
+    """Validate the layout and cadence every state writer takes."""
+    if layout not in ("rebuild", "delta"):
+        raise ValueError(f"layout must be 'rebuild' or 'delta', "
+                         f"got {layout!r}")
+    if compact_every < 2:
+        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
+
+
+def admit_batch(listing: list, batch_id: int, state_dir: str) -> bool:
+    """The replay/out-of-order rule of every fold: ``False`` for an
+    already-committed batch id (a post-crash replay — skip it),
+    ``True`` for an id newer than every commit, a refusal for an
+    UNCOMMITTED id at or below the committed frontier."""
+    if batch_id in {b for b, _ in listing}:
+        return False
+    if any(b >= batch_id for b, _ in listing):
+        raise ValueError(
+            f"batch_id {batch_id} is not newer than the committed "
+            f"state under {state_dir} — merges order frames by batch "
+            "id, so an out-of-order fold would be silently excluded "
+            "or rewrite history")
+    return True
+
+
 def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
                 compact_every: int, batch_frame, merge_fn,
                 partition_by: list[str] | None = None,
                 force_compact: bool = False) -> None:
-    """The one commit step both state writers share (the census sink
-    and the key-table fold): decide replay/out-of-order/delta/compact
-    from the committed listing, merge when compacting, write with the
+    """The one commit step every state writer shares: decide
+    replay/out-of-order/delta/compact from the committed listing
+    (:func:`admit_batch`), merge when compacting, write with the
     crashed-attempt-overwrite rule.
 
     ``batch_frame`` is the batch's OWN state frame (already built);
     ``merge_fn(frames) -> frame`` merges live frames oldest-first.
-    Replayed (already-committed) batch ids are a no-op; an UNCOMMITTED
-    id at or below the committed frontier raises — read-side merging
-    orders frames by batch id, so a late fold would either be silently
-    excluded (below a compact) or rewrite history, never something to
-    do quietly.
 
     ``partition_by`` writes each frame hive-partitioned on the given
     columns, so readers that filter or join on them get partition
-    pruning (static or dynamic) instead of full-frame scans — the IVF
-    ingest index uses this to make a probe read only its cells'
-    files. An EMPTY frame falls back to a plain (unpartitioned) write:
-    a partitioned write of zero rows emits no part files at all and
-    the frame becomes unreadable; the plain empty file keeps the
-    schema, and read-side ``unionByName`` merges the two layouts
-    transparently (the check costs one ``limit(1)`` probe of the
-    frame, paid only on this opt-in path).
+    pruning. An EMPTY frame falls back to a plain write (a partitioned
+    write of zero rows emits no part files and is unreadable); reads
+    merge the two layouts transparently. The check costs one
+    ``limit(1)`` probe, paid only on this opt-in path.
 
     ``force_compact`` makes a delta-layout fold commit a COMPACT
     regardless of the cadence — the vacuum hook: a merge_fn that
@@ -270,25 +302,20 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
     (superseding every masked row) instead of waiting for the
     ``compact_every`` boundary. Still a pure function of the call's
     arguments, so a replay of the same fold re-decides identically.
+    ``batch_frame=None`` (vacuum only) adds no rows: the compact is
+    the merge of the live frames alone.
 
     SCHEMA is part of the one-dir-one-table contract: a batch frame
     whose column set or types drift from the committed state refuses
-    BEFORE any bytes are written (the same pre-write discipline as
-    the signature family/width guards) — a drifted delta would commit
-    fine and then poison every later read or compaction with a
-    union error (or, worse, a silent numeric widening). The check is
-    one parquet-footer schema read of the newest committed frame;
-    column ORDER is free (hive-partitioned frames read their
-    partition column last), evolution means a new state dir or an
-    explicit migration rewrite."""
-    if layout not in ("rebuild", "delta"):
-        raise ValueError(f"layout must be 'rebuild' or 'delta', "
-                         f"got {layout!r}")
-    if compact_every < 2:
-        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
+    BEFORE any bytes are written — a drifted delta would poison every
+    later read or compaction with a union error or a silent numeric
+    widening. One footer schema read of the newest frame; column
+    ORDER is free (hive-partitioned frames read their partition
+    column last)."""
+    check_fold_args(layout, compact_every)
     listing = state_listing(spark, state_dir)
     check_layout(listing, layout, state_dir)
-    if listing:
+    if listing and batch_frame is not None:
         newest_b, newest_k = listing[-1]
         stored = {(f.name, f.dataType.simpleString())
                   for f in spark.read.parquet(
@@ -303,30 +330,23 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
                 "drifted delta would poison later reads/compactions; "
                 "migrate to a new state dir (or rewrite all frames) "
                 "to evolve the schema")
-    if batch_id in {b for b, _ in listing}:
+    if not admit_batch(listing, batch_id, state_dir):
         return                           # committed replay — skip
-    if any(b >= batch_id for b, _ in listing):
-        raise ValueError(
-            f"batch_id {batch_id} is not newer than the committed "
-            f"state under {state_dir} — merges order frames by batch "
-            "id, so an out-of-order fold would be silently excluded "
-            "or rewrite history")
     live = live_frames(listing, before=batch_id)
+    batch = [] if batch_frame is None else [batch_frame]
 
-    def _read(frames):
-        return [spark.read.parquet(state_path(state_dir, b, k))
-                for b, k in frames]
+    def _merged():
+        return merge_fn([spark.read.parquet(state_path(state_dir, b, k))
+                         for b, k in live] + batch)
 
     if layout == "rebuild":
-        frame = (merge_fn(_read(live) + [batch_frame]) if live
-                 else batch_frame)
+        frame = _merged() if live else batch_frame
         kind = "full"
     elif not live:
         frame, kind = batch_frame, "compact"   # first commit IS full
     elif (force_compact
           or sum(k == "delta" for _, k in live) + 1 >= compact_every):
-        frame = merge_fn(_read(live) + [batch_frame])
-        kind = "compact"
+        frame, kind = _merged(), "compact"
     else:
         frame, kind = batch_frame, "delta"
     # overwrite is safe HERE and only here: the dir can only pre-exist
@@ -335,6 +355,114 @@ def fold_commit(spark, state_dir: str, batch_id: int, layout: str,
     if partition_by and not frame.isEmpty():
         writer = writer.partitionBy(*partition_by)
     writer.parquet(state_path(state_dir, batch_id, kind))
+
+
+def union_frames(frames: list):
+    """Pure ``unionByName`` — the merge of every family whose batches
+    carry disjoint ids by contract (IVF, PQ, signatures): the protocol
+    skips replayed batch ids, so the one way a batch's rows could
+    appear twice never reaches the union."""
+    return functools.reduce(lambda u, f: u.unionByName(f), frames)
+
+
+@dataclass(frozen=True)
+class VersionedTable:
+    """What one versioned-state family declares; the commit protocol,
+    reads, guards, tombstones and vacuum are shared.
+
+    - ``name`` labels refusals (``"IVF state under ..."``);
+    - ``merge(frames)`` merges live frames oldest-first; with
+      ``mask_before_merge`` it is called as ``merge(frames, deletes)``
+      and masks tombstones itself (the key election must not let a
+      forgotten owner win);
+    - ``fingerprint``: ``(what, sql_expr, expected)`` triples — every
+      committed row holds ``sql_expr == expected``; ``what`` is a
+      ``str.format`` template naming the value in refusals, ``hint``
+      says why a mismatch is refused;
+    - ``id_col``: the tombstone id column (``None``: the frame's first
+      column); ``deletes=False``: no tombstone side-stream;
+    - ``partition_by``: hive-partition every frame on these columns.
+    """
+    name: str
+    merge: Callable = union_frames
+    fingerprint: tuple = ()
+    hint: str = ""
+    id_col: str | None = None
+    deletes: bool = True
+    mask_before_merge: bool = False
+    partition_by: tuple | None = None
+
+    def check(self, spark, state_dir: str, action: str = "fold") -> None:
+        """Refuse a fingerprint mismatch against the COMMITTED state:
+        ``limit(1)`` probes of the raw live frames, newest first and
+        PAST empty ones (zero-row deltas are routine for streaming
+        sinks). An empty/absent state passes."""
+        exprs = [e for _, e, _ in self.fingerprint]
+        if not exprs:
+            return
+        for b, k in reversed(live_frames(state_listing(spark, state_dir))):
+            probe = (spark.read.parquet(state_path(state_dir, b, k))
+                     .selectExpr(*exprs).limit(1).collect())
+            if probe:
+                break
+        else:
+            return
+        for (what, _, want), got in zip(self.fingerprint, probe[0]):
+            if got != want:
+                raise ValueError(
+                    f"{self.name} state under {state_dir} holds "
+                    f"{what.format(got)} but this {action} uses "
+                    f"{what.format(want)} — {self.hint}; use the stored "
+                    "value or a new state dir")
+
+    def merged(self, spark, state_dir: str, frames: list):
+        """Merge ``frames`` (oldest first) and mask the current
+        tombstones — the one path under reads and compactions, so every
+        compact bakes the delete set in."""
+        deletes = read_deletes_state(spark, state_dir) if self.deletes \
+            else None
+        if self.mask_before_merge:
+            return self.merge(frames, deletes)
+        out = self.merge(frames)
+        if deletes is None:
+            return out
+        return mask_deletes(out, deletes, self.id_col or out.columns[0])
+
+    def fold(self, spark, state_dir: str, batch_id: int, frame,
+             compact_every: int = 8, layout: str = "delta") -> None:
+        """Commit ``frame`` — the batch's own state rows from the
+        family's encoder — via :func:`fold_commit`. Run :meth:`check`
+        first: batch callers before every fold, the streaming sinks
+        before the build."""
+        fold_commit(spark, state_dir, batch_id, layout, compact_every,
+                    frame, lambda fr: self.merged(spark, state_dir, fr),
+                    partition_by=self.partition_by)
+
+    def read(self, spark, state_dir: str):
+        """The current state as ONE DataFrame: the live frames merged,
+        tombstones masked (no tombstones: one listing, the plain merge).
+        Raises on an empty or mixed-layout state dir."""
+        frames = _read_live(spark, state_dir)
+        if not frames:
+            raise RuntimeError(
+                f"no committed {self.name} state under {state_dir}")
+        return self.merged(spark, state_dir, frames)
+
+    def vacuum(self, spark, state_dir: str, batch_id: int,
+               keep_last: int = 1) -> list[int]:
+        """Erase tombstoned rows NOW: guard, commit a FORCED compact of
+        the live frames (the merge bakes the delete set in), prune the
+        superseded frames. The vacuum IS a fold (``batch_id`` from the
+        ingest sequence). Returns the pruned batch ids."""
+        if not state_listing(spark, state_dir):
+            raise RuntimeError(
+                f"no committed {self.name} state under {state_dir} — "
+                "nothing to vacuum")
+        self.check(spark, state_dir, "vacuum")
+        fold_commit(spark, state_dir, batch_id, "delta", 2, None,
+                    lambda fr: self.merged(spark, state_dir, fr),
+                    partition_by=self.partition_by, force_compact=True)
+        return prune_state(spark, state_dir, keep_last)
 
 
 def describe_state(spark, state_dir: str) -> dict:
@@ -355,28 +483,25 @@ def describe_state(spark, state_dir: str) -> dict:
     if not fs.exists(jpath):
         return out
     committed = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name[:1] in _KINDS and name[1:].isdigit():
-            marker = jvm.org.apache.hadoop.fs.Path(st.getPath(), "_SUCCESS")
-            if not fs.exists(marker):
-                out["markerless"].append(name)
-                continue
-            files = n_bytes = 0
-            mtime = st.getModificationTime()
-            stack = [st.getPath()]
-            while stack:
-                for sub in fs.listStatus(stack.pop()):
-                    if sub.isDirectory():
-                        stack.append(sub.getPath())
-                    elif not sub.getPath().getName().startswith(("_", ".")):
-                        files += 1
-                        n_bytes += sub.getLen()
-                        mtime = max(mtime, sub.getModificationTime())
-            committed.append((int(name[1:]), _KINDS[name[:1]],
-                              files, n_bytes, mtime))
-        elif name.startswith("_writer.tmp"):
-            out["stray_tmp"].append(name)
+    for p, b, st, ok in _numbered_dirs(spark, state_dir, _KINDS):
+        if not ok:
+            out["markerless"].append(st.getPath().getName())
+            continue
+        files = n_bytes = 0
+        mtime = st.getModificationTime()
+        stack = [st.getPath()]
+        while stack:
+            for sub in fs.listStatus(stack.pop()):
+                if sub.isDirectory():
+                    stack.append(sub.getPath())
+                elif not sub.getPath().getName().startswith(("_", ".")):
+                    files += 1
+                    n_bytes += sub.getLen()
+                    mtime = max(mtime, sub.getModificationTime())
+        committed.append((b, _KINDS[p], files, n_bytes, mtime))
+    out["stray_tmp"] = [n for n in (st.getPath().getName()
+                                    for st in fs.listStatus(jpath))
+                        if n.startswith("_writer.tmp")]
     committed.sort()
     out["frames"] = [{"batch_id": b, "kind": k, "files": f, "bytes": n,
                       "mtime_ms": m}
@@ -394,31 +519,31 @@ def describe_state(spark, state_dir: str) -> dict:
             pass                      # mixed layout — live set undefined
     lease = jvm.org.apache.hadoop.fs.Path(jpath, "_writer")
     if fs.exists(lease):
-        stream = fs.open(lease)
         try:
-            raw = jvm.org.apache.commons.io.IOUtils.toString(stream,
-                                                             "UTF-8")
-        finally:
-            stream.close()
-        try:
-            out["writer"] = json.loads(raw).get("writer_id")
+            out["writer"] = _read_lease(jvm, fs, lease)
         except ValueError:
             out["writer"] = "<corrupt>"
     return out
 
 
 def prune_state(spark, state_dir: str, keep_last: int = 2) -> list[int]:
-    """Delete SUPERSEDED committed state, layout-aware (see
-    :func:`caspr_spark.streaming.prune_census_state` for the consumer-
-    facing contract): rebuild keeps the newest ``keep_last`` full
-    frames; delta keeps everything from the ``keep_last``-th-newest
-    compact on (compacts are restore points, younger deltas are live
-    data). Deliberate conservatism: deltas BETWEEN kept compacts are
-    also retained even though the newer compact supersedes them —
+    """Delete SUPERSEDED committed state, layout-aware: rebuild keeps
+    the newest ``keep_last`` full frames (default 2 — the live state
+    plus one predecessor for in-flight readers); delta keeps
+    everything from the ``keep_last``-th-newest compact on (compacts
+    are restore points, younger deltas are live data and are never
+    touched). Deliberate conservatism: deltas BETWEEN kept compacts
+    are also retained even though the newer compact supersedes them —
     they are what lets a restore REPLAY forward from the older compact
     if the newer one is ever found bad; dropping them would make the
-    older restore point cosmetic. Markerless dirs are never touched.
-    Returns deleted ids."""
+    older restore point cosmetic. Markerless dirs (a concurrently
+    writing fold owns those) are never touched. Returns deleted ids.
+
+    Run it AFTER consumers of the old versions have finished — parquet
+    dirs a lazy plan still reads must not be deleted under it (the
+    same swap-discipline caveat as ``append_history_keys``);
+    scheduling it one trigger behind a stream keeps one version of
+    slack."""
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     listing = state_listing(spark, state_dir)
@@ -447,24 +572,17 @@ def prune_state(spark, state_dir: str, keep_last: int = 2) -> list[int]:
 # ---------------------------------------------------------------------------
 # Deletion tombstones — the forget-document / right-to-erasure side-stream.
 #
-# A versioned state table is append-only by construction: once a row folds
-# in, nothing in the protocol removes it. For a 100 TB training-data store
-# that is a lifecycle gap, not a feature — a withdrawn/poisoned document's
-# dedup keys suppress future legitimate docs forever, and a deleted corpus
-# document's embedding stays searchable forever. Tombstones close it with
-# the same machinery: a DELETES side-stream (its own versioned state dir
-# nested under the parent at ``{state_dir}/deletes`` — the name matches no
-# ``[vcd]{digits}`` frame pattern, so parent listings/prune/describe never
-# see it) holds id-only frames folded under the identical commit protocol
-# (``_SUCCESS`` markers, replay skip, out-of-order refusal, its own
-# compaction cadence with a ``distinct`` merge). Readers anti-join the
-# delete set; every parent COMPACT bakes resolved deletes in (the compact
-# is the full state, so masked rows simply leave it), and ``prune_state``
-# on the parent then erases the superseded frames' bytes — that is the
-# GDPR story: tombstone → next compact → prune, with only the deleted IDS
-# (never content) retained as the audit trail. The delete set is ids-only
-# and distinct-compacted, so the standing anti-join cost is one broadcast
-# against O(distinct deleted ids) — negligible beside the frames it masks.
+# A versioned state table is append-only by construction, so without
+# tombstones a withdrawn document's dedup keys suppress future docs forever
+# and a deleted document's embedding stays searchable forever. A DELETES
+# side-stream — its own versioned state dir at ``{state_dir}/deletes``
+# (matching no ``[vcd]{digits}`` frame pattern, so parent listings, prune
+# and describe never see it) — holds id-only frames under the same commit
+# protocol, compacted with a ``distinct`` merge. Readers anti-join the
+# delete set (:meth:`VersionedTable.merged`); every parent COMPACT bakes it
+# in, and ``prune_state`` then erases the superseded frames' bytes:
+# tombstone → next compact → prune, with only the deleted IDS (never
+# content) retained as the audit trail.
 # ---------------------------------------------------------------------------
 
 _DELETES_SUBDIR = "deletes"
@@ -477,19 +595,6 @@ def deletes_dir(state_dir: str) -> str:
     return f"{state_dir}/{_DELETES_SUBDIR}"
 
 
-def _merge_delete_frames(frames: list):
-    """Tombstone merge: union + distinct. Repeated deletes of the same
-    id are routine (an erasure request re-submitted, a replayed delete
-    day) and the anti-join doesn't care, but compaction deduplicates so
-    the standing delete set is bounded by DISTINCT deleted ids."""
-    if not frames:
-        raise ValueError("_merge_delete_frames needs at least one frame")
-    u = frames[0]
-    for f in frames[1:]:
-        u = u.unionByName(f)
-    return u.distinct()
-
-
 def append_deletes_state(spark, state_dir: str, batch_id: int,
                          ids_frame, compact_every: int = 8) -> None:
     """Fold a tombstone batch (id rows ONLY — one column, named the
@@ -498,7 +603,11 @@ def append_deletes_state(spark, state_dir: str, batch_id: int,
     strictly-increasing ``batch_id`` (its OWN sequence, independent of
     the parent's — the two streams have separate frontiers), replayed
     ids skip, out-of-order ids refuse. The ids take effect immediately
-    on any read that goes through :func:`apply_deletes_state`."""
+    on every read of the parent table. Compaction merges union +
+    distinct: repeated deletes of the same id are routine (an erasure
+    request re-submitted, a replayed delete day) and the anti-join
+    doesn't care, but the standing delete set stays bounded by
+    DISTINCT deleted ids."""
     if len(ids_frame.columns) != 1:
         raise ValueError(
             f"tombstone frames carry exactly ONE column (the parent "
@@ -506,51 +615,33 @@ def append_deletes_state(spark, state_dir: str, batch_id: int,
             "id before folding so no content rides into the delete "
             "stream")
     fold_commit(spark, deletes_dir(state_dir), batch_id, "delta",
-                compact_every, ids_frame, _merge_delete_frames)
+                compact_every, ids_frame,
+                lambda frames: union_frames(frames).distinct())
 
 
 def read_deletes_state(spark, state_dir: str):
-    """The current delete set under ``state_dir`` — one distinct-ish
-    id column (distinct is guaranteed only at compaction; consumers
-    anti-join, which doesn't care) — or ``None`` when no tombstone has
-    ever been folded. The no-tombstones probe is one filesystem
-    listing, so delete-free tables keep their exact pre-tombstone read
-    plans."""
-    frames = live_frames(state_listing(spark, deletes_dir(state_dir)))
-    if not frames:
-        return None
-    dfs = [spark.read.parquet(state_path(deletes_dir(state_dir), b, k))
-           for b, k in frames]
-    u = dfs[0]
-    for f in dfs[1:]:
-        u = u.unionByName(f)
-    return u
+    """The current delete set under ``state_dir`` (one id column,
+    distinct only as of the last compaction), or ``None`` when no
+    tombstone was ever folded — one listing, no plan change."""
+    frames = _read_live(spark, deletes_dir(state_dir))
+    return union_frames(frames) if frames else None
 
 
-def apply_deletes_state(spark, state_dir: str, frame,
-                        id_col: str | None = None):
-    """Mask the current delete set out of ``frame`` (a merged read of
-    the parent's live frames): broadcast anti-join on the tombstone id
-    column. ``id_col`` defaults to the delete frames' own single
-    column name — which the parent contract requires to match the
-    parent's id column; a frame that lacks it raises rather than
-    silently returning unmasked rows. No tombstones → ``frame``
-    untouched (and the plan unchanged)."""
-    from pyspark.sql import functions as _F
+def mask_deletes(frame, deletes, col: str):
+    """Anti-join the delete set out of ``frame`` on ``col``: a
+    broadcast of the distinct tombstoned ids. A frame that lacks the
+    tombstone column raises rather than silently returning unmasked
+    rows."""
+    from pyspark.sql import functions as F
 
-    deletes = read_deletes_state(spark, state_dir)
-    if deletes is None:
-        return frame
-    col = id_col or deletes.columns[0]
     if col not in frame.columns:
         raise ValueError(
-            f"delete stream under {deletes_dir(state_dir)} tombstones "
-            f"column {col!r} but the state frame has columns "
-            f"{frame.columns} — the tombstone id column must match the "
-            "parent table's id column")
+            f"the delete stream tombstones column {col!r} but the state "
+            f"frame has columns {frame.columns} — the tombstone id "
+            "column must match the parent table's id column")
     return frame.join(
-        _F.broadcast(deletes.select(_F.col(deletes.columns[0])
-                                    .alias(col)).distinct()),
+        F.broadcast(deletes.select(F.col(deletes.columns[0])
+                                   .alias(col)).distinct()),
         on=col, how="left_anti")
 
 

@@ -404,45 +404,87 @@ def streaming_gram_census(stream: DataFrame, id_col: str = "doc_id",
                  .withColumn("gram_n", F.lit(n).cast("int")))
 
 
-from caspr_spark.state import (check_layout, live_frames, prune_state,
-                               state_listing, state_path)
+from caspr_spark.state import prune_state
 
 
-def _census_state_listing(spark, state_dir: str) -> list[tuple[int, str]]:
-    """Committed census state dirs as sorted ``(batch_id, kind)``
-    pairs (see :mod:`caspr_spark.state` for the shared dir protocol:
-    ``v{b}`` full / ``c{b}`` compact / ``d{b}`` delta, ``_SUCCESS``
-    markers, Hadoop FS)."""
-    return state_listing(spark, state_dir)
+def _state_sink(state_dir: str, table, build, writer_id: str | None,
+                compact_every: int, layout: str = "delta",
+                offset: int = 0):
+    """The one ``foreachBatch`` fold every state sink shares. Per
+    micro-batch: claim the single-writer lease once when ``writer_id``
+    is set; apply the replay/out-of-order rule
+    (:func:`caspr_spark.state.admit_batch` — a committed batch skips
+    EVERYTHING, a late one refuses before the build can write output);
+    run the fingerprint guard BEFORE the build, so a mismatched state
+    refuses before any output bytes exist; then build the batch's
+    state frame (``build(spark, batch_df, b, has_history)`` — the
+    family's encoder, which may write per-batch output first) and fold
+    it, inside a ``cache_scope``. The guard runs once per instance
+    only under the lease — every later frame is then this instance's
+    own commit — and on every fold without it, since another writer
+    may share the dir. Folds run at ``batch_id + offset`` (ANN/PQ: +1,
+    as state ids start at 1; stable across restarts because the
+    checkpoint replays ids)."""
+    from caspr_spark.state import (admit_batch, check_fold_args, check_layout,
+                                   claim_writer, state_listing)
+
+    check_fold_args(layout, compact_every)
+    done = {"claimed": False, "checked": False}
+
+    def _fold(batch_df: DataFrame, batch_id: int) -> None:
+        from caspr_spark.cache import cache_scope
+
+        spark = batch_df.sparkSession
+        b = batch_id + offset
+        if writer_id is not None and not done["claimed"]:
+            claim_writer(spark, state_dir, writer_id)
+            done["claimed"] = True
+        listing = state_listing(spark, state_dir)
+        check_layout(listing, layout, state_dir)
+        if not admit_batch(listing, b, state_dir):
+            return               # replay of a committed batch — no-op
+        if writer_id is None or not done["checked"]:
+            table.check(spark, state_dir)
+            done["checked"] = True
+        with cache_scope():
+            frame = build(spark, batch_df, b, bool(listing))
+            table.fold(spark, state_dir, b, frame, compact_every, layout)
+
+    return _fold
 
 
-def _census_state_versions(spark, state_dir: str) -> list[int]:
-    """Committed batch ids regardless of kind (the replay-skip set)."""
-    return [b for b, _ in state_listing(spark, state_dir)]
+def _drain(stream: DataFrame, sink, checkpoint_dir: str,
+           timeout_sec: int, what: str) -> None:
+    """Run ``sink`` over a finite stream with the ``availableNow``
+    trigger — the batch-job-shaped invocation of a continuous sink
+    (rerun on a schedule, reusing the checkpoint dir to resume at the
+    next batch id) — and raise if it does not drain in time. The
+    ``run_*_to_state`` callers pass the checkpoint dir as the sink's
+    ``writer_id`` too, so a stream with a DIFFERENT checkpoint pointed
+    at the same state dir refuses at its first fold."""
+    _await_drain(stream.writeStream.foreachBatch(sink)
+                 .option("checkpointLocation", checkpoint_dir)
+                 .trigger(availableNow=True).start(), timeout_sec, what)
+
+
+def _await_drain(q, timeout_sec: int, what: str) -> None:
+    """Wait for an ``availableNow`` query to finish; on timeout stop it
+    first (so it can't keep mutating its sink) and raise instead of
+    returning partial results."""
+    if not q.awaitTermination(timeout_sec):
+        q.stop()
+        raise TimeoutError(
+            f"{what} stream did not drain within {timeout_sec}s")
 
 
 def read_gram_census_state(spark, state_dir: str, n: int):
-    """Current census state as ONE DataFrame, either layout.
+    """Current census state as ONE DataFrame, either layout: the
+    newest full census (rebuild), or the newest compact merged with
+    every younger delta (delta — at most ``compact_every`` frames).
+    Raises on an empty or mixed-layout state dir."""
+    from caspr_spark.llm.dedup import _census_table
 
-    Rebuild layout (``v{b}`` dirs): the newest full census. Delta
-    layout (``c{b}``/``d{b}``): the newest compact merged with every
-    younger delta via
-    :func:`~caspr_spark.llm.dedup.merge_gram_censuses` — at most
-    ``compact_every`` frames, so the read-side merge stays bounded.
-    Raises on an empty state dir and on a mixed-layout dir (a rebuild
-    sink and a delta sink pointed at the same path)."""
-    from caspr_spark.llm.dedup import _check_gram_n, merge_gram_censuses
-
-    frames = live_frames(state_listing(spark, state_dir))
-    if not frames:
-        raise RuntimeError(f"no committed census state under {state_dir}")
-    dfs = [spark.read.parquet(state_path(state_dir, b, k))
-           for b, k in frames]
-    # the single-frame path keeps the in-plan width guard the merge
-    # path gets from merge_gram_censuses — a state built at one n must
-    # never silently feed a consumer expecting another
-    return (_check_gram_n(dfs[0], n) if len(dfs) == 1
-            else merge_gram_censuses(dfs, n))
+    return _census_table(n).read(spark, state_dir)
 
 
 def gram_census_sink(state_dir: str, id_col: str = "doc_id",
@@ -453,7 +495,8 @@ def gram_census_sink(state_dir: str, id_col: str = "doc_id",
     """The PRODUCTION sink for the streaming census — the
     ``foreachBatch`` + census-fold composition
     :func:`streaming_gram_census`'s docstring prescribes, as a ready
-    ``foreachBatch`` callable. Two write layouts:
+    ``foreachBatch`` callable (:func:`_state_sink` over the census
+    table). Two write layouts:
 
     ``layout='rebuild'``: micro-batch ``b`` folds into the latest
     committed census and writes the WHOLE census to ``state_dir/v{b}``.
@@ -473,19 +516,12 @@ def gram_census_sink(state_dir: str, id_col: str = "doc_id",
     This is the layout that survives frequent triggers over
     billions-of-grams state.
 
-    Both layouts write NEW paths only, never overwriting live state
-    (the :func:`~caspr_spark.llm.dedup.append_history_keys` swap
-    discipline: overwriting parquet a lazy reader may still hold
-    truncates it mid-scan). Exactly-once across restarts comes from
-    two facts: Structured Streaming's checkpoint REPLAYS a batch id
-    after a crash rather than renumbering, and the fold is keyed by
-    that id — a replayed batch whose dir is already committed
-    (``_SUCCESS`` present) is skipped; one that crashed mid-write left
-    no marker and is rewritten idempotently (batch ids never reuse, so
-    the only possible occupant of the dir is a failed attempt of the
-    SAME fold; the delta-vs-compact decision is a pure function of the
-    committed set, so a replay re-decides identically). Prune
-    superseded dirs with :func:`prune_census_state`.
+    Both layouts follow the :mod:`caspr_spark.state` commit protocol:
+    NEW paths only, ``_SUCCESS``-marked commits, and exactly-once
+    across restarts because the checkpoint REPLAYS a batch id after a
+    crash and the fold is keyed by it (a committed replay skips, a
+    markerless crashed attempt is rewritten). Prune superseded dirs
+    with :func:`prune_census_state`.
 
     ``track_first=True`` builds first-occurrence-tracking state
     (``first_id``/``first_pos`` ride through every fold and merge),
@@ -494,58 +530,24 @@ def gram_census_sink(state_dir: str, id_col: str = "doc_id",
     consumes.
 
     ``writer_id`` (pass the stream's CHECKPOINT DIR) arms the
-    single-writer tripwire: the first fold claims the state dir via
-    :func:`caspr_spark.state.claim_writer`, so a second stream
-    misconfigured onto the same state dir with a different checkpoint
-    fails loudly at its first fold instead of interleaving batch ids
-    (each stream numbers batches from its own checkpoint — the commit
-    protocol cannot tell their ids apart after the fact).
+    single-writer lease (:func:`caspr_spark.state.claim_writer`): a
+    second stream pointed at the same state dir with a different
+    checkpoint fails loudly at its first fold instead of interleaving
+    batch ids.
     """
-    if layout not in ("rebuild", "delta"):
-        raise ValueError(f"layout must be 'rebuild' or 'delta', "
-                         f"got {layout!r}")
-    if compact_every < 2:
-        raise ValueError(f"compact_every must be >= 2, got {compact_every}")
-    from caspr_spark.llm.dedup import (build_gram_census,
-                                       merge_gram_censuses)
-    from caspr_spark.state import claim_writer, fold_commit
+    from caspr_spark.llm.dedup import _census_table, build_gram_census
 
-    claimed = []
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        if writer_id is not None and not claimed:
-            claim_writer(batch_df.sparkSession, state_dir, writer_id)
-            claimed.append(True)
-        fold_commit(
-            batch_df.sparkSession, state_dir, batch_id, layout,
-            compact_every,
-            build_gram_census(batch_df, id_col, text_col, n,
-                              track_first=track_first),
-            lambda frames: merge_gram_censuses(frames, n))
-
-    return _fold
+    return _state_sink(
+        state_dir, _census_table(n),
+        lambda spark, df, b, _: build_gram_census(
+            df, id_col, text_col, n, track_first=track_first),
+        writer_id, compact_every, layout)
 
 
-def prune_census_state(spark, state_dir: str, keep_last: int = 2) -> list[int]:
-    """The TTL job :func:`gram_census_sink`'s docstring prescribes —
-    delete SUPERSEDED committed state, layout-aware:
-
-    - rebuild layout (``v{b}``): every full census older than the
-      newest ``keep_last`` (default 2 — the live census plus one
-      predecessor for in-flight readers);
-    - delta layout (``c{b}``/``d{b}``): everything strictly older than
-      the ``keep_last``-th-newest COMPACT — compacts are the restore
-      points; deltas younger than the oldest kept compact are LIVE
-      data and are never touched.
-
-    Never touches markerless dirs (a concurrently-writing fold owns
-    those). Returns the deleted batch ids. Run it AFTER consumers of
-    the old versions have finished — parquet dirs a lazy plan still
-    reads must not be deleted under it (the same swap-discipline
-    caveat as ``append_history_keys``); scheduling it one trigger
-    behind the stream keeps one version of slack.
-    """
-    return prune_state(spark, state_dir, keep_last)
+#: The TTL job :func:`gram_census_sink`'s docstring prescribes — the
+#: layout-aware :func:`caspr_spark.state.prune_state` under the census's
+#: name.
+prune_census_state = prune_state
 
 
 def run_gram_census_to_state(stream: DataFrame, state_dir: str,
@@ -555,30 +557,14 @@ def run_gram_census_to_state(stream: DataFrame, state_dir: str,
                              layout: str = "rebuild",
                              compact_every: int = 8,
                              timeout_sec: int = 120) -> DataFrame:
-    """Drain a document stream through :func:`gram_census_sink` and
-    return the current census state (:func:`read_gram_census_state`).
-    ``availableNow`` trigger: processes everything currently in the
-    source then stops — the batch-job-shaped invocation of the
-    continuous pipeline (rerun on a schedule, or swap the trigger for
-    a long-lived query). The checkpoint dir is what makes restarts
-    resume at the next batch id instead of refolding from scratch —
-    reuse it across invocations, and keep ``layout`` stable per state
-    dir (the sink refuses a mismatch). The checkpoint dir doubles as
-    the sink's ``writer_id``: a second stream pointed at this state
-    dir under a DIFFERENT checkpoint refuses at its first fold
-    (:func:`caspr_spark.state.claim_writer`)."""
-    q = (stream.writeStream
-         .foreachBatch(gram_census_sink(state_dir, id_col, text_col, n,
-                                        track_first, layout,
-                                        compact_every,
-                                        writer_id=checkpoint_dir))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"gram census stream did not drain within {timeout_sec}s")
+    """Drain a document stream through :func:`gram_census_sink`
+    (:func:`_drain`) and return the current census state
+    (:func:`read_gram_census_state`). Keep ``layout`` stable per state
+    dir (the sink refuses a mismatch)."""
+    _drain(stream, gram_census_sink(state_dir, id_col, text_col, n,
+                                    track_first, layout, compact_every,
+                                    writer_id=checkpoint_dir),
+           checkpoint_dir, timeout_sec, "gram census")
     return read_gram_census_state(stream.sparkSession, state_dir, n)
 
 
@@ -593,7 +579,9 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
                       writer_id: str | None = None):
     """EXACTLY-ONCE streaming corpus dedup — the continuous-crawl
     composition of the incremental-dedup state layer, as a ready
-    ``foreachBatch`` callable. Per micro-batch ``b``:
+    ``foreachBatch`` callable (:func:`_state_sink` over the key table
+    in exact mode, the signature table in near mode). Per micro-batch
+    ``b``:
 
     1. batch-INTERNAL dedup (``batch_internal=True``): exact mode
        keeps the min-id doc per content key
@@ -612,9 +600,7 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
        deterministic recompute makes its bytes already correct, so
        the write is skipped and marked dirs stay immutable);
     4. fold the kept docs' keys/signatures into the versioned state —
-       THE commit point
-       (:func:`~caspr_spark.llm.dedup.append_history_keys_state` /
-       :func:`~caspr_spark.llm.dedup.append_history_signatures_state`).
+       THE commit point.
 
     Exactly-once across crashes, by the write order: a replayed batch
     whose state fold committed skips everything (its output dir was
@@ -623,8 +609,12 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
     kept set against the identical pre-batch state and rewrites the
     output idempotently. Out-of-order batch ids refuse up front —
     before the output write, so a late batch can't leave a committed
-    output dir with no matching state fold. The deduplicated corpus
-    is the union of committed output dirs
+    output dir with no matching state fold. Near mode's family/width
+    guard also runs before the output write: a mismatched
+    pre-existing signature state would otherwise mis-band the history
+    join silently and commit an under-deduped output dir that the
+    corrected replay then skips and folds permanently. The
+    deduplicated corpus is the union of committed output dirs
     (:func:`read_dedup_corpus`); each dir is immutable once marked,
     so downstream consumers can incrementally pick up new ``k{b}``
     dirs without re-reading old ones. Retention: ``out_dir`` gains one
@@ -637,67 +627,35 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
     hash-only key table (~40 B/doc — a 1e9-doc corpus joins against
     ~40 GB, shuffled on the key, never the text); per-batch writes are
     O(batch). Near mode builds the batch's shingle+minhash signatures
-    ONCE per micro-batch and shares them across the internal LSH dedup
-    and the history banded join (``signatures=`` /
-    ``batch_signatures=`` plumbing); the state fold alone re-derives
-    from the written parquet. ``writer_id`` (pass the checkpoint dir)
-    arms the single-writer lease on the state dir. Kept docs are
-    re-read from the just-written parquet for the fold, so output and
-    state are derived from the same bytes and the batch plan runs
-    once; per-batch caches are released by a ``cache_scope`` around
-    each fold, so a long-lived stream never accumulates stale
-    persisted relations.
+    ONCE per micro-batch and shares them across the internal LSH dedup,
+    the history banded join and the state fold (``signatures=`` /
+    ``batch_signatures=`` plumbing). ``writer_id`` (pass the
+    checkpoint dir) arms the single-writer lease on the state dir.
+    Kept docs are re-read from the just-written parquet for the fold,
+    so output and state are derived from the same bytes and the batch
+    plan runs once.
     """
     if mode not in ("exact", "near"):
         raise ValueError(f"mode must be 'exact' or 'near', got {mode!r}")
-    from caspr_spark.llm.dedup import (append_history_keys_state,
-                                       append_history_signatures_state,
+    from caspr_spark.cache import register_cache
+    from caspr_spark.llm.dedup import (_KEYS_TABLE, _signature_rows,
+                                       _signature_table,
+                                       build_history_keys,
                                        build_history_signatures,
-                                       check_signature_state,
                                        dedup_against_history, exact_dedup,
-                                       minhash_lsh_dedup,
-                                       read_history_keys_state,
-                                       read_history_signatures_state)
-    from caspr_spark.state import (claim_writer, output_committed,
-                                   state_listing)
+                                       minhash_lsh_dedup)
+    from caspr_spark.state import output_committed
 
-    claimed = []
-    family_verified = []
+    table = (_KEYS_TABLE if mode == "exact"
+             else _signature_table(hash_family, num_hashes))
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        from caspr_spark.cache import cache_scope
-
-        spark = batch_df.sparkSession
-        if writer_id is not None and not claimed:
-            claim_writer(spark, state_dir, writer_id)
-            claimed.append(True)
-        committed = [b for b, _ in state_listing(spark, state_dir)]
-        if batch_id in committed:
-            return               # replay of a committed batch — no-op
-        if any(b >= batch_id for b in committed):
-            raise ValueError(
-                f"batch_id {batch_id} is not newer than the committed "
-                f"state under {state_dir} — a late fold would leave an "
-                "output dir with no matching state commit")
-        # everything below materializes inside the fold (parquet +
-        # state writes), so the scope can release every per-batch
-        # cache — without it a long-lived stream piles up one stale
-        # persisted shingle relation per micro-batch
-        with cache_scope():
-            _fold_batch(spark, batch_df, batch_id, committed)
-
-    def _fold_batch(spark, batch_df: DataFrame, batch_id: int,
-                    committed: list) -> None:
-        from caspr_spark.cache import register_cache
-
+    def _build(spark, batch_df: DataFrame, batch_id: int,
+               has_history: bool) -> DataFrame:
         kept = batch_df
         batch_sigs = None
         if mode == "near":
             # ONE shingle+minhash pass per micro-batch, shared by the
-            # internal LSH dedup and the history banded join (the
-            # state fold still re-derives signatures from the WRITTEN
-            # kept docs — output and state keep deriving from the
-            # same bytes)
+            # internal LSH dedup, the history banded join and the fold
             batch_sigs = register_cache(
                 build_history_signatures(batch_df, id_col, text_col,
                                          num_hashes, shingle_size,
@@ -713,55 +671,34 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
                                       bands, shingle_size, threshold,
                                       hash_family=hash_family,
                                       signatures=batch_sigs)[0])
-        if committed:
-            if mode == "exact":
-                kept, _ = dedup_against_history(
-                    kept, None, id_col, text_col, mode="exact",
-                    normalize=normalize,
-                    history_keys=read_history_keys_state(spark, state_dir))
-            else:
-                bs = (batch_sigs.join(kept.select(id_col), on=id_col,
-                                      how="left_semi")
-                      if batch_internal else batch_sigs)
-                # the join returned a fresh object — re-attach the
-                # provenance mark or the family guard probes per batch
-                # (safe: the sink built these signatures itself)
-                bs._caspr_hash_family = hash_family
-                hs = read_history_signatures_state(spark, state_dir)
-                if not family_verified:
-                    # PRE-WRITE guard (r14 ADVICE): the FIRST history
-                    # fold of this sink instance verifies BOTH the
-                    # hash family AND the signature width against the
-                    # committed state — before any output bytes are
-                    # written. A width-mismatched pre-existing state
-                    # would otherwise mis-band the history join
-                    # silently, commit an under-deduped output dir,
-                    # and only the post-write fold guard would raise;
-                    # the corrected replay then skips the marked dir
-                    # and folds the stale bytes permanently. Every
-                    # later frame passed the fold-side guard against
-                    # the same family/width, so one probe suffices.
-                    check_signature_state(spark, state_dir,
-                                          hash_family, num_hashes)
-                    family_verified.append(True)
-                # verified (this fold or an earlier one) — attach the
-                # provenance mark so dedup_against_history skips its
-                # own per-batch family probe
-                hs._caspr_hash_family = hash_family
-                kept, _ = dedup_against_history(
-                    kept, None, id_col, text_col, mode="near",
-                    num_hashes=num_hashes, bands=bands,
-                    shingle_size=shingle_size, threshold=threshold,
-                    hash_family=hash_family,
-                    history_signatures=hs,
-                    batch_signatures=bs)
+        if has_history and mode == "exact":
+            kept, _ = dedup_against_history(
+                kept, None, id_col, text_col, mode="exact",
+                normalize=normalize,
+                history_keys=table.read(spark, state_dir))
+        elif has_history:
+            bs = (batch_sigs.join(kept.select(id_col), on=id_col,
+                                  how="left_semi")
+                  if batch_internal else batch_sigs)
+            hs = table.read(spark, state_dir)
+            # both sides are verified for this family — the batch side
+            # was built here, the state by the sink's guard — so mark
+            # them and dedup_against_history skips its own probes
+            bs._caspr_hash_family = hs._caspr_hash_family = hash_family
+            kept, _ = dedup_against_history(
+                kept, None, id_col, text_col, mode="near",
+                num_hashes=num_hashes, bands=bands,
+                shingle_size=shingle_size, threshold=threshold,
+                hash_family=hash_family,
+                history_signatures=hs,
+                batch_signatures=bs)
         out_path = f"{out_dir}/k{batch_id}"
         # A crash BETWEEN the output's _SUCCESS commit and the state
         # fold replays here with the output dir already complete; the
         # recompute is deterministic (identical pre-batch state AND
         # configuration — hold the sink's parameters constant across
         # replays of an uncommitted batch; family/width drift refuses
-        # via the guards BEFORE this write, and the other knobs are
+        # via the guard BEFORE this write, and the other knobs are
         # part of the state-dir contract regardless), so the existing
         # bytes are already correct — skip the rewrite to keep marked
         # dirs genuinely immutable for concurrent readers. One O(1)
@@ -771,29 +708,18 @@ def dedup_corpus_sink(state_dir: str, out_dir: str,
             kept.write.mode("overwrite").parquet(out_path)
         kept_written = spark.read.parquet(out_path)
         if mode == "exact":
-            append_history_keys_state(spark, state_dir, batch_id,
-                                      kept_written, id_col, text_col,
-                                      normalize, compact_every)
-        else:
-            # the fold derives its ROW SET from the written bytes
-            # (kept_written ids) but reuses the batch's already-computed
-            # signature values instead of a third full shingle+minhash
-            # pass — deterministic build, so the committed state bytes
-            # are identical (regression-tested in test_streaming)
-            # check_state=False: the fold-side family/width probe is one
-            # limit(1) Spark job per micro-batch, and this sink already
-            # enforces the same contract pre-write — the first history
-            # fold of the instance runs check_signature_state before any
-            # output bytes, and every later frame under state_dir was
-            # committed by this same instance at these same parameters
-            # (single-writer lease), so the probe could only re-confirm
-            # what this process just wrote
-            append_history_signatures_state(
-                spark, state_dir, batch_id, kept_written, id_col,
-                text_col, num_hashes, shingle_size, hash_family,
-                compact_every, signatures=batch_sigs, check_state=False)
+            return build_history_keys(kept_written, id_col, text_col,
+                                      normalize)
+        # the fold derives its ROW SET from the written bytes
+        # (kept_written ids) but reuses the batch's already-computed
+        # signature values instead of another full shingle+minhash
+        # pass — deterministic build, so the committed state bytes are
+        # identical (regression-tested in test_streaming)
+        return _signature_rows(kept_written, id_col, text_col,
+                               num_hashes, shingle_size, hash_family,
+                               signatures=batch_sigs)
 
-    return _fold
+    return _state_sink(state_dir, table, _build, writer_id, compact_every)
 
 
 def ann_ingest_sink(state_dir: str, centroids: list,
@@ -802,76 +728,34 @@ def ann_ingest_sink(state_dir: str, centroids: list,
                     partition_by_cell: bool = False,
                     writer_id: str | None = None):
     """EXACTLY-ONCE streaming embedding ingest into the versioned IVF
-    index — the Structured-Streaming composition of
-    :func:`caspr_spark.llm.similarity.append_ivf_state`, as a ready
-    ``foreachBatch`` callable (the similarity-family sibling of
-    :func:`gram_census_sink` / :func:`dedup_corpus_sink`). Each
-    micro-batch assigns ITS OWN vectors under the pinned ``centroids``
-    and folds them as an O(batch) delta; replayed batch ids skip,
-    out-of-order ids refuse, a mismatched quantizer refuses via the
-    fingerprint guard. Streaming batch ids are 0-based, the state
-    protocol's ids start at the caller's choice — this sink folds at
-    ``batch_id + 1`` so the first micro-batch commits as 1 (state ids
-    must be positive and strictly increasing; the +1 is stable across
-    restarts because the checkpoint replays ids, never renumbers).
+    index (:func:`caspr_spark.llm.similarity.append_ivf_state`) as a
+    ``foreachBatch`` callable (:func:`_state_sink`): each micro-batch
+    assigns ITS OWN vectors under the pinned ``centroids`` and folds
+    them as an O(batch) delta at ``batch_id + 1`` (state ids start at
+    1). ``partition_by_cell`` hive-partitions frames on ``ivf_cell``;
     ``writer_id`` (pass the checkpoint dir) arms the single-writer
-    lease; ``partition_by_cell`` writes frames hive-partitioned on
-    ``ivf_cell`` so probe searches get dynamic partition pruning (see
-    :func:`~caspr_spark.llm.similarity.append_ivf_state`). Search the
-    accumulated index any time with
-    :func:`caspr_spark.llm.similarity.cosine_topk_ivf_state`; prune
-    superseded frames with :func:`caspr_spark.state.prune_state`."""
-    from caspr_spark.llm.similarity import append_ivf_state
-    from caspr_spark.state import claim_writer
+    lease. Search with
+    :func:`caspr_spark.llm.similarity.cosine_topk_ivf_state`."""
+    from caspr_spark.llm.similarity import _ivf_frame, _ivf_table
 
-    claimed = []
-    fp_verified = []
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if writer_id is not None and not claimed:
-            claim_writer(spark, state_dir, writer_id)
-            claimed.append(True)
-        # fingerprint probe once per sink instance (round 16): the
-        # FIRST fold verifies the committed state's quantizer (the
-        # probe runs before the replay skip, so a replayed first batch
-        # still verifies); every later frame under state_dir was
-        # committed by this same instance under the same pinned
-        # centroids (single-writer lease), so the per-fold limit(1)
-        # probe job would only re-confirm what this process just wrote
-        append_ivf_state(spark, state_dir, batch_id + 1, batch_df,
-                         centroids, id_col, vec_col, compact_every,
-                         partition_by_cell=partition_by_cell,
-                         check_state=not fp_verified)
-        fp_verified.append(True)
-
-    return _fold
+    return _state_sink(
+        state_dir, _ivf_table(centroids, partition_by_cell),
+        lambda spark, df, b, _: _ivf_frame(df, centroids, id_col, vec_col),
+        writer_id, compact_every, offset=1)
 
 
 def run_ann_ingest_to_state(stream: DataFrame, state_dir: str,
                             checkpoint_dir: str, centroids: list,
                             timeout_sec: int = 120,
                             **sink_kwargs) -> DataFrame:
-    """Drain an embedding stream through :func:`ann_ingest_sink` and
-    return the accumulated IVF index
-    (:func:`~caspr_spark.llm.similarity.read_ivf_state`).
-    ``availableNow`` trigger — the batch-job-shaped invocation; reuse
-    the checkpoint dir across invocations to resume at the next batch
-    id. The checkpoint dir doubles as the single-writer ``writer_id``
-    on the state dir."""
+    """Drain an embedding stream through :func:`ann_ingest_sink`
+    (:func:`_drain`) and return the accumulated IVF index
+    (:func:`~caspr_spark.llm.similarity.read_ivf_state`)."""
     from caspr_spark.llm.similarity import read_ivf_state
 
-    q = (stream.writeStream
-         .foreachBatch(ann_ingest_sink(state_dir, centroids,
-                                       writer_id=checkpoint_dir,
-                                       **sink_kwargs))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"ANN ingest stream did not drain within {timeout_sec}s")
+    _drain(stream, ann_ingest_sink(state_dir, centroids,
+                                   writer_id=checkpoint_dir, **sink_kwargs),
+           checkpoint_dir, timeout_sec, "ANN ingest")
     return read_ivf_state(stream.sparkSession, state_dir)
 
 
@@ -880,38 +764,28 @@ def pq_ingest_sink(state_dir: str, codebooks,
                    compact_every: int = 8,
                    writer_id: str | None = None):
     """EXACTLY-ONCE streaming embedding ingest into the versioned PQ
-    code table — :func:`ann_ingest_sink`'s sibling for
-    :func:`caspr_spark.llm.pq.append_pq_state`, as a ready
-    ``foreachBatch`` callable. Each micro-batch encodes ITS OWN
-    vectors under the pinned ``codebooks`` and folds the codes as an
-    O(batch) delta (the stored rows are the compressed codes, never
-    the vectors); replayed batch ids skip, out-of-order ids refuse, a
-    mismatched codebook refuses via the fingerprint guard. Same
-    ``batch_id + 1`` offset as the other sinks (state ids are
-    positive; stable across restarts because the checkpoint replays
-    ids). ``writer_id`` (pass the checkpoint dir) arms the
-    single-writer lease. Search the accumulated table any time with
+    code table (:func:`caspr_spark.llm.pq.append_pq_state`) —
+    :func:`ann_ingest_sink`'s sibling: each micro-batch encodes ITS
+    OWN vectors under the pinned ``codebooks`` and folds the codes at
+    ``batch_id + 1``. ``writer_id`` (pass the checkpoint dir) arms the
+    single-writer lease. Search with
     :func:`caspr_spark.llm.pq.adc_topk_pq_state`."""
-    from caspr_spark.llm.pq import append_pq_state
-    from caspr_spark.state import claim_writer
+    from caspr_spark.llm.pq import _pq_frame, _pq_table
 
-    claimed = []
-    fp_verified = []
+    return _state_sink(
+        state_dir, _pq_table(codebooks),
+        lambda spark, df, b, _: _pq_frame(df, codebooks, id_col, vec_col),
+        writer_id, compact_every, offset=1)
 
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if writer_id is not None and not claimed:
-            claim_writer(spark, state_dir, writer_id)
-            claimed.append(True)
-        # codebook probe once per sink instance — same rationale as
-        # ann_ingest_sink's centroid probe skip (single-writer lease;
-        # the first fold's probe runs before the replay skip)
-        append_pq_state(spark, state_dir, batch_id + 1, batch_df,
-                        codebooks, id_col, vec_col, compact_every,
-                        check_state=not fp_verified)
-        fp_verified.append(True)
 
-    return _fold
+def _corpus_dirs(spark, out_dir: str):
+    """Committed ``k{b}`` and ``m{b}`` ids under a corpus sink's
+    ``out_dir``, plus the newest merge id (``None`` before any)."""
+    from caspr_spark.state import committed_output_ids
+
+    ids_m = committed_output_ids(spark, out_dir, prefix="m")
+    return (committed_output_ids(spark, out_dir), ids_m,
+            max(ids_m) if ids_m else None)
 
 
 def read_dedup_corpus(spark, out_dir: str) -> DataFrame:
@@ -924,11 +798,7 @@ def read_dedup_corpus(spark, out_dir: str) -> DataFrame:
     dirs at or below its id survive only inside the crash window
     between a merge's commit and its victim deletes; the supersede
     rule keeps that window double-read-free)."""
-    from caspr_spark.state import committed_output_ids
-
-    ids_k = committed_output_ids(spark, out_dir)
-    ids_m = committed_output_ids(spark, out_dir, prefix="m")
-    base = max(ids_m) if ids_m else None
+    ids_k, ids_m, base = _corpus_dirs(spark, out_dir)
     paths = [f"{out_dir}/m{base}"] if base is not None else []
     paths += [f"{out_dir}/k{b}" for b in ids_k
               if base is None or b > base]
@@ -970,13 +840,11 @@ def compact_corpus(spark, out_dir: str, keep_last: int = 8,
     ``keep_last`` tail k-dirs are immutable by contract; run the next
     compaction (or ``keep_last=0``) to sweep a forgotten doc that
     still sits in the tail."""
-    from caspr_spark.state import _fs, committed_output_ids
+    from caspr_spark.state import _fs
 
     if keep_last < 0:
         raise ValueError(f"keep_last must be >= 0, got {keep_last}")
-    ids_k = committed_output_ids(spark, out_dir)
-    ids_m = committed_output_ids(spark, out_dir, prefix="m")
-    base = max(ids_m) if ids_m else None
+    ids_k, ids_m, base = _corpus_dirs(spark, out_dir)
     # leftovers a crashed earlier compaction already superseded
     stale = [f"k{b}" for b in ids_k if base is not None and b <= base]
     stale += [f"m{b}" for b in ids_m if base is not None and b < base]
@@ -1011,40 +879,24 @@ def run_dedup_corpus_to_state(stream: DataFrame, state_dir: str,
                               out_dir: str, checkpoint_dir: str,
                               timeout_sec: int = 120,
                               **sink_kwargs) -> DataFrame:
-    """Drain a document stream through :func:`dedup_corpus_sink` and
-    return the deduplicated corpus so far (:func:`read_dedup_corpus`).
-    ``availableNow`` trigger — the batch-job-shaped invocation; reuse
-    the checkpoint dir across invocations to resume at the next batch
-    id. The checkpoint dir doubles as the single-writer ``writer_id``
-    on the state dir."""
-    q = (stream.writeStream
-         .foreachBatch(dedup_corpus_sink(state_dir, out_dir,
-                                         writer_id=checkpoint_dir,
-                                         **sink_kwargs))
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"dedup corpus stream did not drain within {timeout_sec}s")
+    """Drain a document stream through :func:`dedup_corpus_sink`
+    (:func:`_drain`) and return the deduplicated corpus so far
+    (:func:`read_dedup_corpus`)."""
+    _drain(stream, dedup_corpus_sink(state_dir, out_dir,
+                                     writer_id=checkpoint_dir,
+                                     **sink_kwargs),
+           checkpoint_dir, timeout_sec, "dedup corpus")
     return read_dedup_corpus(stream.sparkSession, out_dir)
 
 
 def run_to_memory(streaming_df: DataFrame, name: str,
                   output_mode: str = "complete",
                   timeout_sec: int = 120) -> DataFrame:
-    """Drain a finite stream into an in-memory table and return it.
-
-    Raises on timeout instead of returning a partial table (the query is
-    stopped first so it can't keep mutating the sink)."""
-    q = (streaming_df.writeStream.format("memory").queryName(name)
-         .outputMode(output_mode).trigger(availableNow=True).start())
-    finished = q.awaitTermination(timeout_sec)
-    if not finished:
-        q.stop()
-        raise TimeoutError(
-            f"stream {name!r} did not drain within {timeout_sec}s")
+    """Drain a finite stream into an in-memory table and return it
+    (:func:`_await_drain`: raises on timeout, never a partial table)."""
+    _await_drain(streaming_df.writeStream.format("memory").queryName(name)
+                 .outputMode(output_mode).trigger(availableNow=True)
+                 .start(), timeout_sec, f"{name!r}")
     return streaming_df.sparkSession.table(name)
 
 

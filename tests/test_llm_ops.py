@@ -926,29 +926,35 @@ class TestIncrementalDedup:
                 spark, str(tmp_path / "bad"), 1, batch, num_hashes=16,
                 hash_family="portable", signatures=sigs)
 
-    def test_fold_check_state_skip_identical(self, spark, tmp_path):
-        """Round-16 optimization: ``check_state=False`` (the streaming
-        sink's per-micro-batch probe skip) commits byte-identical state
-        to the guarded fold."""
+    def test_leased_sink_state_matches_guarded_fold(self, spark, tmp_path):
+        """The leased near-mode corpus sink probes the signature
+        fingerprint once per instance and folds its pre-built
+        signatures; its committed state must equal the always-probing
+        batch fold over the same accepted docs (the sink's output
+        dirs), frame for frame."""
         from caspr_spark.llm.dedup import (append_history_signatures_state,
                                            read_history_signatures_state)
+        from caspr_spark.state import state_listing
+        from caspr_spark.streaming import dedup_corpus_sink
         batch, _ = self._corpora(spark)
-        dirs = {}
-        for name, check in (("guarded", True), ("skipped", False)):
-            d = str(tmp_path / name)
-            dirs[name] = d
-            for day, ids in ((1, (2, 3)), (2, (4,))):
-                append_history_signatures_state(
-                    spark, d, day,
-                    batch.filter(batch.doc_id.isin(list(ids))),
-                    num_hashes=16, hash_family="portable",
-                    compact_every=2, check_state=check)
+        leased, out = str(tmp_path / "leased"), str(tmp_path / "out")
+        sink = dedup_corpus_sink(leased, out, mode="near", num_hashes=16,
+                                 bands=8, hash_family="portable",
+                                 compact_every=2, writer_id="ckpt")
+        for b, ids in enumerate(((2, 3), (4,), (1,))):
+            sink(batch.filter(batch.doc_id.isin(list(ids))), b)
+        guarded = str(tmp_path / "guarded")
+        for b in range(3):
+            append_history_signatures_state(
+                spark, guarded, b, spark.read.parquet(f"{out}/k{b}"),
+                num_hashes=16, hash_family="portable", compact_every=2)
+        assert state_listing(spark, leased) == state_listing(spark, guarded)
         key = lambda r: (r.history_id, tuple(r.shingles),
                          tuple(r.minhash), r.hash_family)
         a = sorted(map(key, read_history_signatures_state(
-            spark, dirs["guarded"]).collect()))
+            spark, guarded).collect()))
         b = sorted(map(key, read_history_signatures_state(
-            spark, dirs["skipped"]).collect()))
+            spark, leased).collect()))
         assert a == b
 
     def test_precomputed_signature_plumbing_is_identical(self, spark):
