@@ -1,94 +1,106 @@
 """Parquet sources/sinks (SURVEY §2.1).
 
-``read_parquet_table`` papers over one real-world wart: Spark 4 refuses
-parquet ``TIMESTAMP(NANOS)`` columns outright. We detect them from the
-file footer (pyarrow, driver-side — no data read), flip the
-``nanosAsLong`` legacy conf for the read, and rebuild proper microsecond
-timestamps with *integer* division (nanosecond epochs exceed 2^53, so
-float division would corrupt them). Truncation toward zero matches how
-DuckDB / pyarrow downcast ns -> us, which keeps oracle comparisons exact.
+Both parquet readers — :func:`read_parquet_table` and
+``streaming.stream_events`` — start from one memoized record,
+:class:`_TableSource`, keyed on the path's ``*.parquet`` files: their
+nanosecond columns (from the first file's footer; pyarrow, driver-side,
+no data read) and the Spark schema inferred once. A read of an
+unchanged path opens no footer and runs no inference.
+
+One ns rule: Spark 4 refuses parquet ``TIMESTAMP(NANOS)``, so a column
+stored as INT64 with that logical type — naive or UTC-adjusted — is
+inferred as a long (``nanosAsLong``) and rebuilt to microseconds with
+*integer* division (ns epochs exceed 2^53; truncation toward zero
+matches DuckDB / pyarrow, which keeps oracle comparisons exact). INT96
+never counts: Spark writes it by default and reads it natively as a
+timestamp, though pyarrow reports it as ``timestamp[ns]`` too.
 """
 
 from __future__ import annotations
 
 import glob
+import json
 import os
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+# confs that change what parquet schema inference returns (nanosAsLong
+# does not: a table with ns columns is always inferred with it on)
+_INFER_CONFS = ("spark.sql.parquet.inferTimestampNTZ.enabled",
+                "spark.sql.parquet.binaryAsString",
+                "spark.sql.parquet.int96AsTimestamp",
+                "spark.sql.parquet.mergeSchema")
 
 
-def _table_files(path: str) -> list[str]:
-    files = sorted(glob.glob(os.path.join(path, "*.parquet"))) if os.path.isdir(path) else [path]
-    return files or [path]
+class _TableSource(NamedTuple):
+    """One parquet path's metadata, for the file listing in its memo key."""
+    root: tuple[str, str]      # (directory, file glob) naming those files
+    ns_cols: tuple[str, ...]   # INT64 TIMESTAMP(NANOS) columns
+    schema: StructType         # Spark's inferred schema, ns columns as longs
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Column names stored as TIMESTAMP(NANOS) in the parquet footer."""
-    schema = pq.read_schema(_table_files(path)[0])
-    out = []
-    for name, typ in zip(schema.names, schema.types):
-        if str(typ) == "timestamp[ns]":
-            out.append(name)
-    return out
+# (path, (file, size, mtime)×N, inference confs, applicationId)
+#   -> _TableSource. Inference costs ~90 ms of driver work per path, a
+# pinned-schema read ~14 ms (sf0.1 documents), and a hit skips the footer
+# read too. A rewritten path, a conf change or a new application misses.
+_TABLE_SOURCES: dict[tuple, _TableSource] = {}
+_TABLE_SOURCES_MAX = 1024
 
 
-# (path, (file, mtime)×N, applicationId) -> inferred Spark schema.
-# ``spark.read.parquet(path)`` pays ~90 ms of driver work per call
-# (eager footer schema inference + file listing on the JVM); with the
-# schema pinned the read costs ~14 ms (measured, sf0.1 documents). The
-# engine's entry queries construct the same base-table frames once or
-# twice per query, so across a bench pass this is tens of seconds of
-# pure driver latency. The memo key includes every parquet file's
-# (name, mtime) — a re-written or appended path misses and re-infers —
-# and the applicationId so a fresh application never reuses a stale
-# schema. The pinned schema is exactly what inference returned for the
-# same file set under the same nanosAsLong conf state, so the resulting
-# DataFrame is identical.
-_SCHEMA_CACHE: dict[tuple, object] = {}
-_SCHEMA_CACHE_MAX = 1024
-
-
-def _read_with_schema_memo(spark: SparkSession, path: str):
+def _table_source(spark: SparkSession, path: str) -> _TableSource:
+    """The memoized :class:`_TableSource` of a parquet file or directory."""
+    if os.path.isdir(path):
+        root = (path, "*.parquet")
+        files = tuple(sorted(glob.glob(os.path.join(path, "*.parquet"))))
+        if not files:
+            raise ValueError(f"no parquet files under {path!r}")
+    else:
+        root, files = os.path.split(path), (path,)
+    listing = tuple((f, st.st_size, st.st_mtime)
+                    for f, st in zip(files, map(os.stat, files)))
+    key = (path, listing, tuple(spark.conf.get(c, None) for c in _INFER_CONFS),
+           spark.sparkContext.applicationId)
+    src = _TABLE_SOURCES.get(key)
+    if src is not None:
+        return src
+    footer = pq.read_metadata(files[0]).schema
+    ns_cols = tuple(c.name for c in map(footer.column, range(len(footer)))
+                    if c.path == c.name             # top-level column
+                    and c.physical_type == "INT64"
+                    and c.logical_type.type == "TIMESTAMP"
+                    and "nanoseconds" in c.logical_type.to_json())
+    prev = spark.conf.get(_NANOS_CONF, "false")
+    if ns_cols:
+        spark.conf.set(_NANOS_CONF, "true")
     try:
-        key = (path,
-               tuple((f, os.path.getmtime(f)) for f in _table_files(path)),
-               spark.sparkContext.applicationId)
-    except OSError:
-        return spark.read.parquet(path)
-    cached = _SCHEMA_CACHE.get(key)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(path)
-    df = spark.read.parquet(path)
-    if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
-        _SCHEMA_CACHE.clear()
-    _SCHEMA_CACHE[key] = df.schema
+        schema = spark.read.parquet(path).schema
+    finally:
+        spark.conf.set(_NANOS_CONF, prev)
+    if len(_TABLE_SOURCES) >= _TABLE_SOURCES_MAX:
+        _TABLE_SOURCES.clear()
+    src = _TABLE_SOURCES[key] = _TableSource(root, ns_cols, schema)
+    return src
+
+
+def _rebuild_ns(df: DataFrame, ns_cols: tuple[str, ...]) -> DataFrame:
+    """Nanosecond longs -> microsecond timestamps, truncating toward zero."""
+    for c in ns_cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
 
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     """Read one parquet table, transparently fixing ns-timestamp columns."""
-    ns_cols = _nanos_timestamp_cols(path)
-    if not ns_cols:
-        return _read_with_schema_memo(spark, path)
-    prev = spark.conf.get(_NANOS_CONF, "false")
-    spark.conf.set(_NANOS_CONF, "true")
-    try:
-        # the memo key is conf-independent but the cached schema was
-        # captured under nanosAsLong=true for ns tables (this branch
-        # always sets it before reading), so reuse is self-consistent
-        df = _read_with_schema_memo(spark, path)
-        for c in ns_cols:
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    finally:
-        spark.conf.set(_NANOS_CONF, prev)
-    return df
+    src = _table_source(spark, path)
+    return _rebuild_ns(spark.read.schema(src.schema).parquet(path), src.ns_cols)
 
 
 def load_tables(spark: SparkSession, sf_dir: str,
@@ -286,6 +298,17 @@ def read_table(spark: SparkSession, path: str, format: str = "csv",
     return getattr(reader, format)(path)
 
 
+def _shard_checksums(df: DataFrame, id_col: str) -> dict[int, tuple[int, int]]:
+    """Per-shard (rows, id checksum) of a shard export — the checksum is
+    order-insensitive: the XOR of the ids' md5 hashes."""
+    return {int(r["__shard"]): (int(r["rows"]), int(r["id_xor"]))
+            for r in df.groupBy("__shard").agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.bit_xor(F.conv(F.substring(F.md5(
+                    F.col(id_col).cast("string")), 1, 15), 16, 10)
+                    .cast("long")).alias("id_xor")).collect()}
+
+
 def write_training_shards(df: DataFrame, path: str, n_shards: int,
                           id_col: str, sort_cols: list[str] | None = None,
                           seed: int = 42) -> dict:
@@ -326,25 +349,16 @@ def write_training_shards(df: DataFrame, path: str, n_shards: int,
     # rand-derived columns) would otherwise produce a manifest for a
     # different row set than the export — the exact torn-export
     # confusion the manifest exists to rule out
-    written = df.sparkSession.read.parquet(path)
-    per_shard = {int(r["__shard"]): {"rows": int(r["rows"]),
-                                     "id_xor": int(r["id_xor"])}
-                 for r in written.groupBy("__shard").agg(
-                     F.count(F.lit(1)).alias("rows"),
-                     # order-insensitive checksum: XOR of id hashes
-                     F.bit_xor(F.conv(F.substring(F.md5(
-                         F.col(id_col).cast("string")), 1, 15), 16, 10)
-                         .cast("long")).alias("id_xor")).collect()}
+    per_shard = _shard_checksums(df.sparkSession.read.parquet(path), id_col)
     manifest = {
         "n_shards": n_shards, "id_col": id_col, "seed": seed,
-        "total_rows": sum(v["rows"] for v in per_shard.values()),
-        "shards": {str(k): per_shard.get(k, {"rows": 0, "id_xor": 0})
+        "total_rows": sum(rows for rows, _ in per_shard.values()),
+        "shards": {str(k): dict(zip(("rows", "id_xor"),
+                                    per_shard.get(k, (0, 0))))
                    for k in range(n_shards)},
     }
-    import json as _json
-    import os as _os
-    with open(_os.path.join(path, "_manifest.json"), "w") as fh:
-        _json.dump(manifest, fh, indent=1, sort_keys=True)
+    with open(os.path.join(path, "_manifest.json"), "w") as fh:
+        json.dump(manifest, fh, indent=1, sort_keys=True)
     return manifest
 
 
@@ -353,19 +367,11 @@ def read_training_shards(spark: SparkSession, path: str,
     """Read a shard export back (all shards), verifying the manifest's
     per-shard row counts and id checksums when ``verify`` (one
     aggregation over the ids — cheap next to the read itself)."""
-    import json as _json
-    import os as _os
-    with open(_os.path.join(path, "_manifest.json")) as fh:
-        manifest = _json.load(fh)
+    with open(os.path.join(path, "_manifest.json")) as fh:
+        manifest = json.load(fh)
     df = spark.read.parquet(path)
     if verify:
-        id_col = manifest["id_col"]
-        got = {int(r["__shard"]): (int(r["rows"]), int(r["id_xor"]))
-               for r in df.groupBy("__shard").agg(
-                   F.count(F.lit(1)).alias("rows"),
-                   F.bit_xor(F.conv(F.substring(F.md5(
-                       F.col(id_col).cast("string")), 1, 15), 16, 10)
-                       .cast("long")).alias("id_xor")).collect()}
+        got = _shard_checksums(df, manifest["id_col"])
         for k, want in manifest["shards"].items():
             if want["rows"] == 0:
                 continue

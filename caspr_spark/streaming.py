@@ -6,7 +6,8 @@ prediction-date filter, caspr/utils/spark/preprocess.py:577-581; SURVEY
 §1.2). This module is the streaming extension:
 
 - ``stream_events``: file-source ``readStream`` over the same parquet
-  tables (handles the ns-timestamp wart like ``read_parquet_table``);
+  tables, from the same source record (schema, file glob, ns-timestamp
+  columns) as ``read_parquet_table``;
 - ``windowed_event_stats``: event-time tumbling-window aggregation with a
   real watermark for late data;
 - ``streaming_last_n``: a custom stateful operator via
@@ -24,51 +25,32 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType
 
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+from caspr_spark.sources import _NANOS_CONF, _rebuild_ns, _table_source
 
 
 def stream_events(spark: SparkSession, path: str,
                   max_files_per_trigger: int | None = None) -> DataFrame:
     """``readStream`` over one parquet table (file or its directory).
 
-    ns-timestamp columns arrive as longs (legacy conf) and are rebuilt to
-    microsecond timestamps with integer division, same as the batch
-    reader in ``caspr_spark.sources``.
+    The schema, the file glob and the ns-timestamp columns come from the
+    same memoized source record as ``read_parquet_table``; ns columns
+    arrive as longs (legacy conf) and are rebuilt to microsecond
+    timestamps by the same integer division.
     """
-    import glob as _glob
-    import os as _os
-
-    from caspr_spark.sources import _nanos_timestamp_cols
-
-    if _os.path.isdir(path):
-        base, pattern = path, "*.parquet"
-        if not _glob.glob(_os.path.join(path, "*.parquet")):
-            raise ValueError(f"no parquet files under {path!r}")
-    else:
-        base, pattern = _os.path.dirname(path), _os.path.basename(path)
-
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
+    src = _table_source(spark, path)
+    if src.ns_cols:
         # NOTE: intentionally NOT restored — the streaming query reads
         # files lazily long after this function returns, so the legacy
         # conf must stay set for the life of the stream. Batch reads are
-        # unaffected: read_parquet_table manages the conf per call.
+        # unaffected: they pin the recorded schema.
         spark.conf.set(_NANOS_CONF, "true")
-    static = spark.read.option("pathGlobFilter", pattern).parquet(base)
-    reader = (spark.readStream.schema(static.schema)
+    base, pattern = src.root
+    reader = (spark.readStream.schema(src.schema)
               .option("pathGlobFilter", pattern))
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(base)
-    for c in ns_cols:
-        # pyarrow reports both TIMESTAMP(NANOS) and Spark-written INT96 as
-        # timestamp[ns]; only the former surfaces as a long under the
-        # legacy conf and needs rebuilding
-        if isinstance(df.schema[c].dataType, LongType):
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    return _rebuild_ns(reader.parquet(base), src.ns_cols)
 
 
 def windowed_event_stats(stream: DataFrame, ts_col: str = "ts",

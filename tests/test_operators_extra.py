@@ -419,18 +419,76 @@ class TestEnsureParallelismCache:
         """Round-16 schema memo: a repeat read of an unchanged path is
         schema-pinned (cache hit) and identical; overwriting the path
         (new file mtimes) misses and re-infers the NEW schema."""
-        from caspr_spark.sources import _SCHEMA_CACHE, read_parquet_table
+        from caspr_spark.sources import _TABLE_SOURCES, read_parquet_table
         import time as _time
         p = str(tmp_path / "m.parquet")
         spark.range(10).coalesce(1).write.parquet(p)
-        _SCHEMA_CACHE.clear()
+        _TABLE_SOURCES.clear()
         a = read_parquet_table(spark, p)
-        assert len(_SCHEMA_CACHE) == 1
+        assert len(_TABLE_SOURCES) == 1
         b = read_parquet_table(spark, p)
-        assert len(_SCHEMA_CACHE) == 1          # hit
+        assert len(_TABLE_SOURCES) == 1         # hit
         assert a.schema == b.schema and b.count() == 10
         _time.sleep(1.1)                        # mtime resolution
         spark.range(10).selectExpr("id", "id * 3 as v") \
              .coalesce(1).write.mode("overwrite").parquet(p)
         c = read_parquet_table(spark, p)
         assert c.columns == ["id", "v"]         # re-inferred, not stale
+
+    def test_schema_memo_keys_inference_confs(self, spark, tmp_path):
+        """A conf that changes parquet schema inference misses the memo:
+        after flipping ``inferTimestampNTZ`` a naive-µs column reads as
+        a fresh ``spark.read.parquet`` would — timestamp_ntz."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import TimestampNTZType, TimestampType
+
+        from caspr_spark.sources import read_parquet_table
+        p = str(tmp_path / "naive_us.parquet")
+        pq.write_table(pa.table({"ts": pa.array([0, 1], pa.int64())
+                                 .cast(pa.timestamp("us"))}), p)
+        conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+        prev = spark.conf.get(conf)
+        try:
+            spark.conf.set(conf, "false")
+            assert read_parquet_table(spark, p).schema["ts"].dataType \
+                == TimestampType()
+            spark.conf.set(conf, "true")
+            got = read_parquet_table(spark, p).schema
+            assert got == spark.read.parquet(p).schema
+            assert got["ts"].dataType == TimestampNTZType()
+        finally:
+            spark.conf.set(conf, prev)
+
+    def test_source_metadata_read_once_per_listing(self, spark, tmp_path,
+                                                   monkeypatch):
+        """A repeat read of an unchanged path opens no parquet footer
+        and adds no memo entry; a rewrite of the path misses (one more
+        footer open)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        import pyarrow.parquet.core as pq_core
+
+        from caspr_spark import sources
+        opened = []
+
+        class CountingParquetFile(pq_core.ParquetFile):
+            def __init__(self, source, *args, **kwargs):
+                opened.append(source)
+                super().__init__(source, *args, **kwargs)
+
+        p = str(tmp_path / "f.parquet")
+        pq.write_table(pa.table({"id": [1, 2]}), p)
+        monkeypatch.setattr(pq_core, "ParquetFile", CountingParquetFile)
+        a = sources.read_parquet_table(spark, p)
+        assert len(opened) == 1
+        b = sources.read_parquet_table(spark, p)
+        assert len(opened) == 1                 # hit: no footer opened
+        assert b.schema == a.schema and b.count() == 2
+        n_memo = len(sources._TABLE_SOURCES)
+        sources.read_parquet_table(spark, p)
+        assert len(sources._TABLE_SOURCES) == n_memo    # no new entry
+        pq.write_table(pa.table({"id": [1, 2, 3], "v": [0.5, 1.5, 2.5]}), p)
+        c = sources.read_parquet_table(spark, p)
+        assert len(opened) == 2                 # rewrite: miss
+        assert c.columns == ["id", "v"] and c.count() == 3

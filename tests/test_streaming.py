@@ -40,6 +40,64 @@ class TestWindowedStats:
         assert abs(got["sum_value"].values - want["sum_value"].values).max() < 1e-6
 
 
+# one instant above 2^53 ns (float64 cannot hold it), one just past it,
+# one 1,500 ns before the epoch (truncates to -1 us, not -2), 0, null
+_TS_NS = [1_704_067_200_123_456_789, 2**53 + 1, -1_500, 0, None]
+
+
+def _write_ts_table(spark, tmp_path, encoding):
+    """``id, ts`` with the _TS_NS instants in one parquet timestamp
+    encoding; returns the path (a file, or Spark's output directory)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    ids = list(range(len(_TS_NS)))
+    ns = pa.array(_TS_NS, pa.int64()).cast(pa.timestamp("ns"))
+    if encoding == "int96":            # spark's default timestamp output
+        us = ns.cast(pa.timestamp("us"), safe=False).cast(pa.int64())
+        p = str(tmp_path / "int96")
+        (spark.createDataFrame(list(zip(ids, us.to_pylist())),
+                               "id long, us long")
+              .selectExpr("id", "timestamp_micros(us) AS ts")
+              .coalesce(1).write.parquet(p))
+        f = next(x for x in os.listdir(p) if x.endswith(".parquet"))
+        assert pq.read_metadata(f"{p}/{f}").schema.column(1) \
+                 .physical_type == "INT96"
+        return p
+    typ = {"ns": pa.timestamp("ns"), "ns_utc": pa.timestamp("ns", tz="UTC"),
+           "us": pa.timestamp("us")}[encoding]
+    p = str(tmp_path / f"{encoding}.parquet")
+    pq.write_table(pa.table({"id": ids, "ts": ns.cast(typ, safe=False)}), p)
+    return p
+
+
+class TestTimestampSources:
+    @pytest.mark.parametrize("encoding", ["ns", "ns_utc", "int96", "us"])
+    def test_batch_and_stream_agree(self, spark, tmp_path, encoding):
+        """Both readers turn every parquet timestamp encoding into a
+        TimestampType column holding pyarrow's ns -> us truncation
+        toward zero: INT64 TIMESTAMP(NANOS), naive or UTC-adjusted, is
+        rebuilt from its longs; Spark's own INT96 and TIMESTAMP_MICROS
+        are read as they are."""
+        import pyarrow as pa
+        from pyspark.sql.types import TimestampType
+
+        from caspr_spark.sources import read_parquet_table
+        want = dict(enumerate(
+            pa.array(_TS_NS, pa.int64()).cast(pa.timestamp("ns"))
+              .cast(pa.timestamp("us"), safe=False).cast(pa.int64())
+              .to_pylist()))
+        assert want[2] == -1
+        p = _write_ts_table(spark, tmp_path, encoding)
+        batch = read_parquet_table(spark, p)
+        stream = run_to_memory(stream_events(spark, p),
+                               f"t_ts_{encoding}", "append")
+        for df in (batch, stream):
+            assert df.schema["ts"].dataType == TimestampType()
+            got = {r.id: r.us for r in
+                   df.selectExpr("id", "unix_micros(ts) AS us").collect()}
+            assert got == want
+
+
 class TestStreamingLastN:
     def test_single_batch_matches_pivot(self, spark, events):
         stream = stream_events(spark, f"{SF_DIR}/events.parquet")
